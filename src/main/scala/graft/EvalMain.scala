@@ -37,7 +37,7 @@ object EvalMain {
     gold.count()
 
     val t0 = System.nanoTime()
-    val scored = Annotate.scored(spark, m).cache()
+    val scored = Annotate.scoredOn(spark, m, m.paragraphs).cache()
     val nSpots = scored.select("url", "para_idx", "offset").distinct().count()
     val annotateSec = (System.nanoTime() - t0) / 1e9
     val nParas = m.paragraphs.count()

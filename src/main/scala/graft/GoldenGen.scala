@@ -29,8 +29,9 @@ object GoldenGen {
 
   /** triple multiset rendered as stable TSV lines. */
   def tripleRows(spark: SparkSession): Seq[String] =
-    pipeline.Annotate
-      .triplesFrom(spark, SparkEntry.model(spark), SparkEntry.scored(spark))
+    graft.triples.Triples.all(
+        pipeline.Annotate.annotationsFrom(spark, SparkEntry.scored(spark)),
+        SparkEntry.model(spark).resources, SparkEntry.model(spark).closure)
       .toDF()
       .groupBy("subj", "pred", "obj").agg(count(lit(1)).as("n"))
       .orderBy("subj", "pred", "obj")

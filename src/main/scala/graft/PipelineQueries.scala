@@ -87,7 +87,8 @@ object PipelineQueries {
       val sc = Disambiguator.spotCandidates(SparkEntry.gated(s), mm.surfaceForms, mm.candidates)
       Disambiguator.baseline(sc, mm.resources).drop("types")
     }),
-    "p_triples" -> ((s, _) => Annotate.triplesFrom(s, m(s), SparkEntry.scored(s)).toDF()),
+    "p_triples" -> ((s, _) => Triples.all(Annotate.annotationsFrom(s, SparkEntry.scored(s)),
+      m(s).resources, m(s).closure).toDF()),
     "p_ntriples_parse" -> ((s, _) =>
       NTriples.fromStrings(s, SyntheticCorpus.redirectsNt ++
         SyntheticCorpus.disambiguationsNt ++ SyntheticCorpus.instanceTypesNt)),

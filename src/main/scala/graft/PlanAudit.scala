@@ -56,7 +56,7 @@ object PlanAudit {
     //    the big joins, window for ranking
     val m = SparkEntry.model(spark)
     audit("scored dataflow",
-      graft.pipeline.Annotate.scored(spark, m),
+      graft.pipeline.Annotate.scoredOn(spark, m, m.paragraphs),
       Seq("BroadcastHashJoin", "Window", "Exchange"))
 
     // 5. ANN LSH: bucket join not a cartesian product

@@ -45,11 +45,11 @@ object ScalingBench {
     try {
       val t0 = System.nanoTime()
       val m = Annotate.syntheticModel(spark, nDocs)
-      // one scored DAG, shared by annotations and triples — calling the
-      // model-taking overloads here would rebuild the automaton (a new
-      // broadcast closure, so not cache-equal) and run the whole
-      // spot+score stage twice inside the timed window
-      val scored = Annotate.scored(spark, m).cache()
+      // one scored DAG, shared by annotations and triples — scoring
+      // twice would rebuild the automaton (a new broadcast closure, so
+      // not cache-equal) and run the whole spot+score stage twice
+      // inside the timed window
+      val scored = Annotate.scoredOn(spark, m, m.paragraphs).cache()
       val ann = Annotate.annotationsFrom(spark, scored).cache()
       val nAnn = ann.count()
       val nTriples = graft.triples.Triples

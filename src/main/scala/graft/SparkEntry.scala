@@ -1,8 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import graft.pipeline.Annotate
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import graft.model.SpotRow
+import graft.pipeline.{Annotate, Model}
+import graft.spot.Spotter
+import graft.triples.Triples
 
 /**
  * Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -21,63 +23,39 @@ object SparkEntry {
   /** Flagship query; driver smoke-checks rows > 0. */
   def entry(spark: SparkSession): DataFrame = {
     val m = Annotate.syntheticModel(spark, nDocs = 30, withTotalCounts = false)
-    Annotate.triples(spark, m).toDF()
+    Triples.all(Annotate.annotationsFrom(spark, Annotate.scoredOn(spark, m, m.paragraphs)),
+      m.resources, m.closure).toDF()
   }
 
-  // Lazily built shared model per (session, size) so each query entry
-  // doesn't rebuild the corpus model from scratch. The expensive derived
-  // stages (gated spots, the scored candidate dataflow) are cached too —
-  // six queries consume `scored`, and recomputing its join DAG per query
-  // would dominate Verify/Bench wall-clock.
-  @volatile private var cachedModel: Option[(SparkSession, graft.pipeline.Model)] = None
-  @volatile private var cachedRaw: Option[DataFrame] = None
-  @volatile private var cachedGated: Option[DataFrame] = None
-  @volatile private var cachedScored: Option[DataFrame] = None
-  private[graft] def model(spark: SparkSession): graft.pipeline.Model = synchronized {
-    cachedModel match {
-      case Some((s, m)) if s eq spark => m
-      case _ =>
-        val m = Annotate.syntheticModel(spark, nDocs = 120)
-        cachedModel = Some((spark, m))
-        cachedRaw = None
-        cachedGated = None
-        cachedScored = None
-        m
-    }
+  /** The shared 120-doc model of one session and its expensive derived
+    * stages, each built on first use. Six queries consume `scored`, and
+    * recomputing its join DAG per query would dominate Verify/Bench
+    * wall-clock. */
+  private final class Shared(val spark: SparkSession) {
+    lazy val model: Model = Annotate.syntheticModel(spark, nDocs = 120)
+    /** Raw (pre-gate) leftmost-longest spots — emitted as `p_raw_spots`
+      * so the DuckDB oracles can re-derive both spot gates from it. */
+    lazy val raw: DataFrame = Spotter.spots(model.paragraphs,
+      spark.sparkContext.broadcast(Spotter.buildAutomaton(model.surfaceForms))).toDF().cache()
+    lazy val gated: DataFrame = Spotter.gatedSpots(
+      raw.as[SpotRow](Encoders.product[SpotRow]), model.surfaceForms).cache()
+    lazy val scored: DataFrame =
+      Annotate.scoredOn(spark, model, model.paragraphs, gated = Some(gated)).cache()
   }
 
-  /** Raw (pre-gate) leftmost-longest spots — emitted as `p_raw_spots` so
-    * the DuckDB oracles can re-derive both spot gates from it. */
-  private[graft] def rawSpots(spark: SparkSession): DataFrame = synchronized {
-    val m = model(spark)
-    cachedRaw.getOrElse {
-      val bc = spark.sparkContext.broadcast(graft.spot.Spotter.buildAutomaton(m.surfaceForms))
-      val r = graft.spot.Spotter.spots(m.paragraphs, bc).toDF().cache()
-      cachedRaw = Some(r)
-      r
-    }
-  }
-
-  private[graft] def gated(spark: SparkSession): DataFrame = synchronized {
-    val m = model(spark)
-    cachedGated.getOrElse {
-      val g = graft.spot.Spotter.gatedSpots(
-        rawSpots(spark).as[graft.model.SpotRow](
-          org.apache.spark.sql.Encoders.product[graft.model.SpotRow]),
-        m.surfaceForms).cache()
-      cachedGated = Some(g)
-      g
-    }
-  }
-
-  private[graft] def scored(spark: SparkSession): DataFrame = synchronized {
-    val m = model(spark)
-    cachedScored.getOrElse {
-      val s = Annotate.scoredFromGated(spark, m, gated(spark)).cache()
-      cachedScored = Some(s)
+  private var shared: Option[Shared] = None
+  private def of(spark: SparkSession): Shared = synchronized {
+    shared.filter(_.spark eq spark).getOrElse {
+      val s = new Shared(spark)
+      shared = Some(s)
       s
     }
   }
+
+  private[graft] def model(spark: SparkSession): Model = of(spark).model
+  private[graft] def rawSpots(spark: SparkSession): DataFrame = of(spark).raw
+  private[graft] def gated(spark: SparkSession): DataFrame = of(spark).gated
+  private[graft] def scored(spark: SparkSession): DataFrame = of(spark).scored
 
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     PipelineQueries.queries ++ RelationalQueries.queries ++ TextOpsQueries.queries

@@ -499,11 +499,13 @@ object TextOpsQueries {
                     ['utm_source','utm_medium','utm_campaign','utm_term','utm_content',
                      'fbclid','gclid','msclkid'], string_split(p, '=')[1])) AS ps
               FROM parts))
-      SELECT doc_id, url,
-             scheme || '://' || host || port_n || path_n || query_n AS canonical_url,
-             min(doc_id) OVER (PARTITION BY scheme || '://' || host || port_n || path_n || query_n)
-               AS canonical_id
-      FROM norm""",
+      SELECT doc_id, url, canonical_url,
+             min(doc_id) OVER (PARTITION BY canonical_url) AS canonical_id
+      FROM (SELECT doc_id, url,
+              CASE WHEN regexp_matches(url, '^([A-Za-z][A-Za-z0-9+.-]*)://([^/:?#]+)(:[0-9]+)?(/[^?#]*)?(\?[^#]*)?')
+                   THEN scheme || '://' || host || port_n || path_n || query_n
+                   ELSE url END AS canonical_url
+            FROM norm)""",
     // ---- LSH families (VERDICT r3 "oracle depth"): the xxhash64 /
     // hyperplane keys pass through via the raw-emitted sidecar tables
     // (t_minhash_bands / t_simhash_sigs / t_ann_buckets / t_emb_buckets);

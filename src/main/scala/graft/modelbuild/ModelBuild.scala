@@ -31,7 +31,7 @@ object ModelBuild {
    * WITHOUT a single-partition global window (which would funnel the
    * whole dictionary through one task at 100 TB): range-partition by the
    * key, rank within each sorted partition, then add cumulative partition
-   * offsets (a tiny broadcast — one row per partition). IDs depend only
+   * offsets (prefix sums over one collected row per partition). IDs depend only
    * on the global key order, not on where range boundaries fall, so any
    * parallelism yields identical IDs (SURVEY.md §7.4(6)). Keys must be
    * distinct (callers pass post-groupBy dimension tables).
@@ -45,14 +45,15 @@ object ModelBuild {
       .withColumn("_rn", row_number().over(
         Window.partitionBy("_pid").orderBy(orderCol)).cast("long"))
       .persist() // pin partition boundaries: offsets below must see the same layout
-    val offsets = withRn.groupBy("_pid").agg(max("_rn").as("_cnt"))
-      .withColumn("_off", coalesce(
-        sum("_cnt").over(Window.orderBy("_pid")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("_pid", "_off")
-    val cut = withRn.join(broadcast(offsets), Seq("_pid"))
-      .withColumn(idName, (col("_off") + col("_rn")).cast("int"))
-      .drop("_pid", "_rn", "_off")
+    // per-partition row counts, one row per partition: the offsets are
+    // their prefix sums, computed on the driver and inlined as a literal
+    val counts = withRn.groupBy("_pid").agg(max("_rn")).collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val offsets = (0 until (if (counts.isEmpty) 0 else counts.keys.max + 1))
+      .scanLeft(0L)((off, pid) => off + counts.getOrElse(pid, 0L))
+    val cut = withRn
+      .withColumn(idName, (typedLit(offsets).getItem(col("_pid")) + col("_rn")).cast("int"))
+      .drop("_pid", "_rn")
     // Materialize + truncate lineage so the pinned intermediate can be
     // freed immediately (otherwise each denseIds call leaks one cached
     // copy of the dimension table for the session's lifetime). When the

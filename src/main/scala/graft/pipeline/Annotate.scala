@@ -1,21 +1,20 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.model._
-import graft.extract.Extractor
 import graft.modelbuild.ModelBuild
 import graft.disambig.Disambiguator
 import graft.filter.AnnotationFilters
-import graft.sources.{NTriples, SyntheticCorpus}
+import graft.sources.SyntheticCorpus
 import graft.spot.Spotter
-import graft.triples.Triples
 
 /**
  * End-to-end facade: model build over a web_pages corpus, then the
  * flagship annotate path (§3.1 restatement in SURVEY.md) —
  * web_pages → extract → paragraphs → spots → candidates → scored →
- * annotations → filters → triples.
+ * annotations → filters → triples. Three entry points: [[Annotate.buildModel]],
+ * [[Annotate.scoredOn]] and [[Annotate.annotationsFrom]]; the output
+ * graph is `Triples.all` over the latter.
  *
  * Holds the intermediate model tables so tests, SparkEntry.queries,
  * Verify and Bench can expose any stage as a DataFrame.
@@ -38,72 +37,19 @@ final case class Model(
 
 object Annotate {
 
-  /** Build all model tables from a corpus + graph dumps. Caches the dims
-   *  (they are re-used by several downstream joins). */
+  /** Build all model tables from a corpus + graph dumps through the
+   *  shared [[ModelGraph]], caching each table in the session (the dims
+   *  are re-used by several downstream joins). Only paragraphs,
+   *  occurrences and the corrected surface forms are forced here. */
   def buildModel(spark: SparkSession,
                  pages: Dataset[WebPage],
                  redirectsNt: Seq[String],
                  disambiguationsNt: Seq[String],
                  instanceTypesNt: Seq[String],
                  withTotalCounts: Boolean = true,
-                 stemmer: graft.util.TextUtil.Stemmer = graft.util.TextUtil.IdentityStemmer): Model = {
-    import spark.implicits._
-    val ns = "http://dbpedia.org/resource/"
-
-    val redirects = NTriples.stripNamespace(NTriples.fromStrings(spark, redirectsNt), ns)
-    val disambigs = NTriples.stripNamespace(NTriples.fromStrings(spark, disambiguationsNt), ns)
-    val instanceTypes = NTriples.stripNamespace(NTriples.fromStrings(spark, instanceTypesNt), ns)
-      .withColumn("obj", regexp_replace(
-        regexp_replace(col("obj"), "http://dbpedia.org/ontology/", "DBpedia:"),
-        "http://schema.org/", "Schema:"))
-
-    // pages feeds both the text-extraction path and the link-occurrence
-    // path; cache so the (expensive) markup parse isn't run twice
-    pages.cache()
-    val extracted = Extractor.extracted(pages)
-    val paragraphs = Extractor.paragraphs(extracted).cache()
-    val occurrences = Extractor.occurrences(pages).cache()
-    // Materialize both parsed dependents, then drop the raw-HTML cache:
-    // repeated model builds in one long-lived session must not accumulate
-    // cached page bytes (they are never read again past this point).
-    paragraphs.count(); occurrences.count()
-    pages.unpersist()
-
-    val closure = ModelBuild.redirectClosure(redirects).cache()
-    val resolved = ModelBuild.resolvedOccurrences(occurrences, closure, disambigs).cache()
-
-    // first pass without raw totals (needed to build the full dictionary)
-    val sfsAnnotatedOnly = ModelBuild.surfaceForms(occurrences, None)
-    val sfs = (if (withTotalCounts) {
-      val fullDict = Spotter.buildAutomaton(sfsAnnotatedOnly, minAnnotationProbability = 0.0)
-      val bc = spark.sparkContext.broadcast(fullDict)
-      val tc = Spotter.totalCounts(paragraphs, bc)
-      // A7: longest-annotation correction — annotated occurrences of a
-      // longer sf also raw-matched its sub-ngrams; remove that inflation
-      // so annotationProbability isn't deflated for nested forms
-      // (reference: MemoryStoreIndexer.scala:69-109). The pre-correction
-      // table is cached: the correction self-joins it, and without the
-      // cache each side would re-run the whole totalCounts spotting chain.
-      val sfsWithTotals = ModelBuild.surfaceForms(occurrences, Some(tc)).cache()
-      val corrected = ModelBuild.ngramTotalCorrection(sfsWithTotals).cache()
-      // materialize the corrected table, then drop the intermediate:
-      // repeated model builds in one long-lived session must not
-      // accumulate cached pre-correction sf tables
-      corrected.count()
-      sfsWithTotals.unpersist()
-      corrected
-    } else sfsAnnotatedOnly.cache())
-
-    val resources = ModelBuild.resources(resolved, instanceTypes).cache()
-    val candidates = ModelBuild.candidates(resolved, sfs, resources).cache()
-    val tokenTypes = ModelBuild.tokenTypes(paragraphs, sfs, stemmer).cache()
-    val entityContexts = ModelBuild.entityContexts(resolved, resources, tokenTypes,
-      stem = stemmer).cache()
-    val totals = ModelBuild.totals(sfs, resources, tokenTypes)
-
-    Model(paragraphs, occurrences, closure, sfs, resources, candidates,
-      tokenTypes, entityContexts, totals, stemmer)
-  }
+                 stemmer: graft.util.TextUtil.Stemmer = graft.util.TextUtil.IdentityStemmer): Model =
+    ModelGraph.build(spark, pages, redirectsNt, disambiguationsNt, instanceTypesNt,
+      stemmer, withTotalCounts, (_, compute) => compute().cache())._1
 
   /**
    * D1 MAX_CONTEXT (= 250, DBTwoStepDisambiguator.scala:71): the
@@ -136,58 +82,41 @@ object Annotate {
    */
   val MaxContextTokens = 250
 
-  /** The annotate path over the model's own paragraphs (or any other
-   *  paragraph set): spots → candidates → scored, MAX_CONTEXT-capped. */
-  def scored(spark: SparkSession, m: Model,
-             cfg: Disambiguator.Config = Disambiguator.Config(),
-             maxContextTokens: Int = MaxContextTokens): DataFrame = {
-    val bc = spark.sparkContext.broadcast(Spotter.buildAutomaton(m.surfaceForms))
-    val raw = Spotter.spots(m.paragraphs, bc, maxContextTokens, cfg.sentenceAlignedWindows)
-    scoredFromGated(spark, m, Spotter.gatedSpots(raw, m.surfaceForms), cfg, maxContextTokens)
-  }
-
-  /** The served-request path: annotate an ARBITRARY paragraph set against
-   *  a built model (the reference's SpotlightInterface.annotate on posted
-   *  text, rest/.../SpotlightInterface.java:120-160 — spot, gate,
-   *  candidates, score — but batched over a Dataset instead of one
-   *  request at a time). Used by the gold-corpus eval path; annotations
-   *  come back under the caller's own (url, para_idx, offset) keys. */
+  /** The annotate path — the reference's SpotlightInterface.annotate on
+   *  posted text (rest/.../SpotlightInterface.java:120-160: spot, gate,
+   *  candidates, score), batched over a Dataset instead of one request
+   *  at a time. Annotates the model's own paragraphs (`m.paragraphs`) or
+   *  any other paragraph set; annotations come back under the caller's
+   *  own (url, para_idx, offset) keys, MAX_CONTEXT-capped.
+   *
+   *  Callers annotating repeatedly (streaming micro-batches) pass the
+   *  prebuilt `automaton` broadcast so the driver-side build runs once;
+   *  callers holding already-computed (possibly cached) `gated` spots of
+   *  these paragraphs pass them to skip the spot stage altogether. Those
+   *  spots must carry the `win` column produced by [[Spotter.spots]] with
+   *  the SAME maxContextTokens and `cfg.sentenceAlignedWindows`. */
   def scoredOn(spark: SparkSession, m: Model, paragraphs: Dataset[ParagraphRow],
                cfg: Disambiguator.Config = Disambiguator.Config(),
                automaton: Option[org.apache.spark.broadcast.Broadcast[graft.spot.AhoCorasick]] = None,
-               maxContextTokens: Int = MaxContextTokens)
+               maxContextTokens: Int = MaxContextTokens,
+               gated: Option[DataFrame] = None)
       : DataFrame = {
-    // callers annotating repeatedly (streaming micro-batches) pass the
-    // prebuilt broadcast so the driver-side automaton build runs once
-    val bc = automaton.getOrElse(
-      spark.sparkContext.broadcast(Spotter.buildAutomaton(m.surfaceForms)))
-    val gated = Spotter.gatedSpots(
-      Spotter.spots(paragraphs, bc, maxContextTokens, cfg.sentenceAlignedWindows),
-      m.surfaceForms)
-    val spotCands = Disambiguator.spotCandidates(gated, m.surfaceForms, m.candidates, cfg)
+    val spots = gated.getOrElse {
+      val bc = automaton.getOrElse(
+        spark.sparkContext.broadcast(Spotter.buildAutomaton(m.surfaceForms)))
+      Spotter.gatedSpots(
+        Spotter.spots(paragraphs, bc, maxContextTokens, cfg.sentenceAlignedWindows),
+        m.surfaceForms)
+    }
+    val spotCands = Disambiguator.spotCandidates(spots, m.surfaceForms, m.candidates, cfg)
     val docTokens = Disambiguator.docTokenHistogram(paragraphs, m.tokenTypes,
       m.stemmer, maxContextTokens, cfg.sentenceAlignedWindows)
     Disambiguator.scored(spotCands, docTokens, m.entityContexts, m.resources, m.totals, cfg)
   }
 
-  /** Same, from an already-computed (possibly cached) gated-spots table —
-   *  avoids rebuilding/broadcasting the automaton and re-running the
-   *  spot stage when the caller holds it. The gated spots must carry the
-   *  `win` column produced by [[Spotter.spots]] with the SAME
-   *  maxContextTokens AND the same `cfg.sentenceAlignedWindows` placement
-   *  (both default to [[MaxContextTokens]] / token-aligned). */
-  def scoredFromGated(spark: SparkSession, m: Model, gated: DataFrame,
-                      cfg: Disambiguator.Config = Disambiguator.Config(),
-                      maxContextTokens: Int = MaxContextTokens): DataFrame = {
-    val spotCands = Disambiguator.spotCandidates(gated, m.surfaceForms, m.candidates, cfg)
-    val docTokens = Disambiguator.docTokenHistogram(m.paragraphs, m.tokenTypes,
-      m.stemmer, maxContextTokens, cfg.sentenceAlignedWindows)
-    Disambiguator.scored(spotCands, docTokens, m.entityContexts, m.resources, m.totals, cfg)
-  }
-
-  /** Filtered best-per-spot annotations from an already-computed scored
-   *  DataFrame (callers holding a cached `scored` avoid re-running the
-   *  join DAG). */
+  /** Filtered best-per-spot annotations from a scored DataFrame (server
+   *  defaults: conf 0.1, support 10). Output graph:
+   *  `Triples.all(annotationsFrom(...), m.resources, m.closure)`. */
   def annotationsFrom(spark: SparkSession, scoredDf: DataFrame,
                       conf: Double = 0.1, minSupport: Long = 10,
                       simThresholds: Seq[Double] = Nil): Dataset[AnnotationRow] = {
@@ -195,19 +124,6 @@ object Annotate {
     val best = Disambiguator.best(scoredDf).as[AnnotationRow]
     AnnotationFilters.standardChain(best, conf, minSupport, simThresholds)
   }
-
-  /** Filtered best-per-spot annotations (server defaults). */
-  def annotations(spark: SparkSession, m: Model,
-                  conf: Double = 0.1, minSupport: Long = 10): Dataset[AnnotationRow] =
-    annotationsFrom(spark, scored(spark, m), conf, minSupport)
-
-  /** Full output graph. */
-  def triples(spark: SparkSession, m: Model): Dataset[TripleRow] =
-    Triples.all(annotations(spark, m), m.resources, m.closure)
-
-  /** Full output graph from a cached scored DataFrame. */
-  def triplesFrom(spark: SparkSession, m: Model, scoredDf: DataFrame): Dataset[TripleRow] =
-    Triples.all(annotationsFrom(spark, scoredDf), m.resources, m.closure)
 
   /** Convenience: model over the synthetic corpus at a given size. */
   def syntheticModel(spark: SparkSession, nDocs: Long, withTotalCounts: Boolean = true): Model =

@@ -1,20 +1,20 @@
 package graft.pipeline
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
  * Stage orchestration with Iceberg-style per-stage checkpoints: every
- * stage writes parquet + a commit marker carrying row counts and
- * per-partition lineage; a committed stage is skipped on re-run, so the
+ * stage writes parquet + a commit marker carrying its row count; a
+ * committed stage is skipped on re-run, so the
  * pipeline resumes idempotently from any completed table (north rule;
  * the reference's CreateSpotlightModel similarly checkpoints each store
  * to disk between stages, CreateSpotlightModel.scala:143-228).
  *
  * Layout per stage dir:
  *   <root>/<stage>/           parquet files
- *   <root>/<stage>/_graft_commit.json   {rows, partitions:[{pid,rows}...]}
+ *   <root>/<stage>/_graft_commit.json   {"stage":"<stage>","rows":N}
  */
 object Pipeline {
 
@@ -22,32 +22,26 @@ object Pipeline {
 
   def isCommitted(dir: String): Boolean = Files.exists(commitPath(dir))
 
-  /** Per-partition lineage counters captured at write time. */
-  private def lineage(df: DataFrame): Array[(Int, Long)] =
-    df.groupBy(spark_partition_id().as("pid")).agg(count(lit(1)).as("rows"))
-      .collect().map(r => (r.getInt(0), r.getLong(1)))
-
   /**
    * Run or resume a stage: if the commit marker exists, read the table
    * back; otherwise compute, persist, write the marker atomically last.
-   * Deterministic stage logic (fixed seeds, stable IDs) makes re-runs
-   * byte-equal — the resume test in PipelineSpec asserts it.
+   * The marker's row count is observed on the write itself (no read-back
+   * job), and the returned table reads the written files with the
+   * computed schema (no schema-inference job). Deterministic stage logic
+   * (fixed seeds, stable IDs) makes re-runs byte-equal — the resume test
+   * in PipelineSpec asserts it.
    */
   def stage(spark: SparkSession, dir: String)(compute: => DataFrame): DataFrame = {
     if (isCommitted(dir)) {
       spark.read.parquet(dir)
     } else {
       val df = compute
-      df.write.mode("overwrite").parquet(dir)
-      val persisted = spark.read.parquet(dir)
-      val parts = lineage(persisted)
-      val rows = parts.map(_._2).sum
-      val json = new StringBuilder
-      json ++= s"""{"stage":"${Paths.get(dir).getFileName}","rows":$rows,"partitions":["""
-      json ++= parts.sortBy(_._1).map { case (p, n) => s"""{"pid":$p,"rows":$n}""" }.mkString(",")
-      json ++= "]}"
-      Files.writeString(commitPath(dir), json.toString)
-      persisted
+      val written = Observation()
+      df.observe(written, count(lit(1)).as("rows")).write.mode("overwrite").parquet(dir)
+      val rows = written.get("rows")
+      Files.writeString(commitPath(dir),
+        s"""{"stage":"${Paths.get(dir).getFileName}","rows":$rows}""")
+      spark.read.schema(df.schema).parquet(dir)
     }
   }
 

@@ -1,32 +1,51 @@
 package graft.pipeline
 
+import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.model._
-import graft.extract.Extractor
-import graft.modelbuild.ModelBuild
-import graft.sources.NTriples
-import graft.spot.Spotter
 import graft.triples.Triples
 
 /**
  * The checkpointed end-to-end DAG (SURVEY.md §3.2 restatement): each
- * stage materializes to `<root>/<stage>/` parquet with a commit marker +
- * per-partition lineage counters via [[Pipeline.stage]]; a re-run skips
+ * stage materializes to `<root>/<stage>/` parquet with a commit marker
+ * (`{"stage":…,"rows":N}`) via [[Pipeline.stage]]; a re-run skips
  * every committed stage and recomputes only downstream of the first
  * missing commit — the north rule's idempotent resume. Stage outputs are
  * deterministic (stable IDs, seeded corpus, pure extract), so a resumed
  * run is row-identical to an uninterrupted one (`RunnerSpec`).
  *
- * Stage graph:
- *   web_pages ─┬─> paragraphs ──────────────┬─> token_types
- *              └─> occurrences ─ closure ──> resolved ─> {surface_forms,
- *                  resources, candidates, entity_contexts} ─> scored
- *                  ─> annotations ─> triples (partitioned by pred)
+ * The model stages are the shared [[ModelGraph]] run through
+ * [[checkpointed]]; Runner adds only what is its own: the run-scoped
+ * checkpoint dir and the stages past the model —
+ *   model ─> sim_thresholds ─> annotations ─> triples
  */
 object Runner {
 
   final case class Result(model: Model, triples: DataFrame, root: String)
+
+  /** Model tables whose committed stage is additionally written sorted +
+   *  bucketed by its join key (SURVEY §4(2)). */
+  private val BucketKeys = Map("candidates" -> "sf_id", "entity_contexts" -> "res_id")
+
+  /** The checkpoint materializer: commit each model table as a stage
+   *  under `root` and cache the read-back. Candidates and entity_contexts
+   *  are swapped for their bucketed table, so every subsequent annotate
+   *  run joins them without re-shuffling the model side. The bucketed
+   *  table is rewritten only when the stage itself was recomputed (or
+   *  the table is missing), so resume stays idempotent. */
+  private[graft] def checkpointed(spark: SparkSession, root: String,
+                                  buckets: Int = 32): ModelGraph.Materialize =
+    (name, compute) => {
+      val dir = s"$root/$name"
+      val wasCommitted = Pipeline.isCommitted(dir)
+      val df = Pipeline.stage(spark, dir)(compute())
+      BucketKeys.get(name).fold(df) { key =>
+        val table = Pipeline.bucketedTableName(root, name)
+        if (!wasCommitted || !spark.catalog.tableExists(table))
+          Pipeline.writeBucketed(df, table, key, buckets)
+        spark.table(table)
+      }.cache()
+    }
 
   def run(spark: SparkSession,
           pages: org.apache.spark.sql.Dataset[WebPage],
@@ -36,22 +55,8 @@ object Runner {
           root: String,
           buckets: Int = 32): Result = {
     import spark.implicits._
-    val ns = "http://dbpedia.org/resource/"
     def st(name: String)(f: => DataFrame): DataFrame =
       Pipeline.stage(spark, s"$root/$name")(f)
-    // SURVEY §4(2): the two big model tables are additionally written
-    // sorted+bucketed (candidates by sf_id, entity_contexts by res_id) so
-    // every subsequent annotate run joins them without re-shuffling the
-    // model side — the bucketed read replaces the plain stage table in
-    // the returned Model. Rewritten only when the stage itself was
-    // recomputed (or the table is missing), so resume stays idempotent.
-    def bucketed(stage: String, df: DataFrame, key: String,
-                 wasCommitted: Boolean): DataFrame = {
-      val table = Pipeline.bucketedTableName(root, stage)
-      if (!wasCommitted || !spark.catalog.tableExists(table))
-        Pipeline.writeBucketed(df, table, key, buckets)
-      spark.table(table)
-    }
 
     // Reliable checkpoints live under the stage root THIS run owns:
     // denseIds (and anything else that cuts lineage) then survives
@@ -73,71 +78,16 @@ object Runner {
     // later lineage cut checkpoints before the next run re-points it.
     spark.sparkContext.setCheckpointDir(s"$root/_checkpoints")
 
-    // pages feeds both the extraction and occurrence stages on a cold
-    // run; cache so the markup parse doesn't execute twice
-    pages.cache()
-    val redirects = NTriples.stripNamespace(NTriples.fromStrings(spark, redirectsNt), ns)
-    val disambigs = NTriples.stripNamespace(NTriples.fromStrings(spark, disambiguationsNt), ns)
-    val instanceTypes = NTriples.stripNamespace(NTriples.fromStrings(spark, instanceTypesNt), ns)
-      .withColumn("obj", regexp_replace(
-        regexp_replace(col("obj"), "http://dbpedia.org/ontology/", "DBpedia:"),
-        "http://schema.org/", "Schema:"))
-
-    val paragraphs = st("paragraphs") {
-      Extractor.paragraphs(Extractor.extracted(pages)).toDF()
-    }.as[ParagraphRow].cache()
-
-    val occurrences = st("occurrences") {
-      Extractor.occurrences(pages).toDF()
-    }.as[OccurrenceRow].cache()
-
-    val closure = st("redirect_closure") {
-      ModelBuild.redirectClosure(redirects)
-    }.cache()
-
-    val resolved = st("resolved_occurrences") {
-      ModelBuild.resolvedOccurrences(occurrences, closure, disambigs)
-    }.cache()
-
-    val surfaceForms = st("surface_forms") {
-      val firstPass = ModelBuild.surfaceForms(occurrences, None)
-      val bc = spark.sparkContext.broadcast(
-        Spotter.buildAutomaton(firstPass, minAnnotationProbability = 0.0))
-      val withTotals = ModelBuild.surfaceForms(
-        occurrences, Some(Spotter.totalCounts(paragraphs, bc))).cache()
-      ModelBuild.ngramTotalCorrection(withTotals).toDF()
-    }.as[SurfaceFormRow].cache()
-
-    val resources = st("resources") {
-      ModelBuild.resources(resolved, instanceTypes).toDF()
-    }.as[ResourceRow].cache()
-
-    val candCommitted = Pipeline.isCommitted(s"$root/candidates")
-    val candidates = bucketed("candidates",
-      st("candidates") {
-        ModelBuild.candidates(resolved, surfaceForms, resources).toDF()
-      }, "sf_id", candCommitted).as[CandidateRow].cache()
-
-    val tokenTypes = st("token_types") {
-      ModelBuild.tokenTypes(paragraphs, surfaceForms).toDF()
-    }.as[TokenTypeRow].cache()
-
-    val ctxCommitted = Pipeline.isCommitted(s"$root/entity_contexts")
-    val entityContexts = bucketed("entity_contexts",
-      st("entity_contexts") {
-        ModelBuild.entityContexts(resolved, resources, tokenTypes).toDF()
-      }, "res_id", ctxCommitted).as[EntityContextRow].cache()
-
-    val totals = ModelBuild.totals(surfaceForms, resources, tokenTypes)
-    val model = Model(paragraphs, occurrences, closure, surfaceForms,
-      resources, candidates, tokenTypes, entityContexts, totals)
+    val (model, resolved) = ModelGraph.build(spark, pages, redirectsNt, disambiguationsNt,
+      instanceTypesNt, graft.util.TextUtil.IdentityStemmer, withTotalCounts = true,
+      checkpointed(spark, root, buckets))
 
     // F1 training as a model stage: simThresholds = ascending quantiles
     // of gold-correct similarity scores over the model's own corpus (the
     // artifact the reference ships as config.getSimilarityThresholds).
     // Persisted like any other model table, so a resumed run loads it
     // instead of re-running the scored DAG.
-    val scoredDf = Annotate.scored(spark, model).cache()
+    val scoredDf = Annotate.scoredOn(spark, model, model.paragraphs).cache()
     val simThresholds = st("sim_thresholds") {
       val ts = graft.filter.AnnotationFilters.trainSimThresholds(
         graft.disambig.Disambiguator.best(scoredDf), resolved.toDF())
@@ -151,7 +101,7 @@ object Runner {
     }.as[AnnotationRow]
 
     val triples = st("triples") {
-      Triples.all(annotations, resources, closure).toDF()
+      Triples.all(annotations, model.resources, model.closure).toDF()
     }
 
     // Every stage is committed and parquet-backed: the run's reliable
@@ -159,7 +109,7 @@ object Runner {
     // cleanup must not fail a successful run); debris from a previous
     // interrupted run under the same root goes with it.
     try deleteLocalDir(s"$root/_checkpoints")
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
 
     Result(model, triples, root)
   }

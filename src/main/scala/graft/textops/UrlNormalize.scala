@@ -23,8 +23,10 @@ import org.apache.spark.sql.functions._
  *
  * Supported input shape is the absolute form
  * `scheme://host[:port][/path][?query][#fragment]` (what a crawl
- * frontier emits); dot-segment resolution and percent-decoding are out
- * of scope and documented here rather than half-implemented.
+ * frontier emits); any other URL (relative, `mailto:`, scheme-less)
+ * passes through unchanged, so distinct malformed URLs never merge into
+ * one canonical group. Dot-segment resolution and percent-decoding are
+ * out of scope and documented here rather than half-implemented.
  *
  * Everything is pure column algebra — a map-only stage with no UDF and
  * no serialization boundary: the regexp extracts/replaces live in
@@ -59,7 +61,8 @@ object UrlNormalize {
       p => p =!= "" && !substring_index(p, "=", 1).isInCollection(TrackingParams))
     val queryNorm = when(size(params) > 0,
       concat(lit("?"), array_join(array_sort(params), "&"))).otherwise(lit(""))
-    concat(scheme, lit("://"), host, portNorm, pathNorm, queryNorm)
+    when(url.rlike(UrlPattern), concat(scheme, lit("://"), host, portNorm, pathNorm, queryNorm))
+      .otherwise(url)
   }
 
   /** Deterministic messy-URL column keyed by `doc_id` — the fixture

@@ -24,7 +24,7 @@ class EndToEndSpec extends AnyFunSuite {
     SyntheticCorpus.redirectsNt,
     SyntheticCorpus.disambiguationsNt,
     SyntheticCorpus.instanceTypesNt)
-  lazy val scoredDf = Annotate.scored(spark, model).cache()
+  lazy val scoredDf = Annotate.scoredOn(spark, model, model.paragraphs).cache()
 
   /** Gold = link-anchored occurrences, redirect-resolved, non-disambig. */
   lazy val gold = {

@@ -1,7 +1,10 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Window}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import graft.modelbuild.ModelBuild
 import graft.model.SurfaceFormRow
@@ -26,6 +29,33 @@ class ModelBuildSpec extends AnyFunSuite {
     val ids2 = ModelBuild.denseIds(df.repartition(13), "w", "id")
       .select("w", "id").as[(String, Int)].collect().toMap
     assert(ids2 === expected)
+  }
+
+  test("denseIds: no window without a partition spec in its plans") {
+    import spark.implicits._
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        plans.add(qe.analyzed); ()
+      }
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      ModelBuild.denseIds((1 to 50).map(i => s"k$i").toDF("k"), "k", "id")
+      // listener events arrive asynchronously and in order: wait for a
+      // marker query run after denseIds
+      spark.range(1).select(lit("denseIds-done")).collect()
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (!plans.toArray.exists(_.toString.contains("denseIds-done")) &&
+             System.nanoTime() < deadline) Thread.sleep(20)
+    } finally spark.listenerManager.unregister(listener)
+    val all = plans.toArray(Array.empty[LogicalPlan]).toSeq
+    assert(all.exists(_.toString.contains("denseIds-done")))
+    val windows = all.flatMap(_.collect { case w: Window => w })
+    assert(windows.nonEmpty, "denseIds ranks within partitions through a window")
+    assert(windows.forall(_.partitionSpec.nonEmpty),
+      windows.filter(_.partitionSpec.isEmpty).mkString("\n"))
   }
 
   test("A7 ngram correction: sub-ngram totals reduced by containing sf annotations") {

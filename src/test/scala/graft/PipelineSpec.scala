@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -26,12 +27,47 @@ class PipelineSpec extends AnyFunSuite {
     val b = Pipeline.stage(spark, s"$root/pages")(computed())
     assert(computations === 1) // skipped: read back from committed parquet
     assert(a.collect().toSet === b.collect().toSet)
-    // commit marker carries lineage counters
+    // the commit marker's row count is the written table's
     val marker = Files.readString(java.nio.file.Paths.get(s"$root/pages/_graft_commit.json"))
-    assert(marker.contains("\"rows\":10") && marker.contains("partitions"))
+    val rows = """"rows":(\d+)""".r.findFirstMatchIn(marker).map(_.group(1).toLong)
+    assert(rows === Some(spark.read.parquet(s"$root/pages").count()))
+    assert(rows === Some(10L))
     Pipeline.invalidate(s"$root/pages")
-    Pipeline.stage(spark, s"$root/pages")(computed())
-    assert(computations === 2)
+    // counted by the write itself: a stage runs no job beyond the write's own
+    val plainJobs = jobsOf(computed().write.mode("overwrite").parquet(s"$root/plain"))
+    val stageJobs = jobsOf(Pipeline.stage(spark, s"$root/pages")(computed()))
+    assert(computations === 3)
+    assert(plainJobs > 0 && stageJobs === plainJobs)
+  }
+
+  /** Jobs started by `action`, seen by a SparkListener. Listener events
+    * arrive asynchronously but in order: a barrier job in its own group
+    * marks the end of the count. */
+  private def jobsOf(action: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = java.util.UUID.randomUUID().toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => jobs.incrementAndGet(); ()
+          case g if g == s"$group-end" => done.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      action
+      sc.setJobGroup(s"$group-end", "barrier")
+      sc.parallelize(Seq(1), 1).count()
+      assert(done.await(30, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    jobs.get
   }
 
   test("resume mid-pipeline: downstream rebuilt from committed upstream, identical rows") {

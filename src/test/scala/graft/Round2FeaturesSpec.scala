@@ -457,7 +457,7 @@ class Round2FeaturesSpec extends AnyFunSuite {
   test("MAX_CONTEXT: oversized paragraphs score per window under ORIGINAL keys") {
     import spark.implicits._
     // an oversized paragraph through the Runner-path scoring function
-    // (Annotate.scored): spots keep original (url, para_idx, offset) and
+    // (Annotate.scoredOn): spots keep original (url, para_idx, offset) and
     // join only their own window's histogram — the round-2 scale-killer
     // (unbounded context join) and the round-2 advice bug (synthetic
     // para_idx/offsets leaking to eval joins) both gone.

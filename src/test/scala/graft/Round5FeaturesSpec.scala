@@ -134,9 +134,10 @@ class Round5FeaturesSpec extends AnyFunSuite {
     // every bundled corpus paragraph fits one 250-token window → the two
     // placements must be byte-identical end-to-end
     val base = Annotate.annotationsFrom(spark,
-      Annotate.scored(spark, m)).toDF()
+      Annotate.scoredOn(spark, m, m.paragraphs)).toDF()
     val flagged = Annotate.annotationsFrom(spark,
-      Annotate.scored(spark, m, Disambiguator.Config(sentenceAlignedWindows = true))).toDF()
+      Annotate.scoredOn(spark, m, m.paragraphs,
+        Disambiguator.Config(sentenceAlignedWindows = true))).toDF()
     assert(base.count() > 0)
     assert(base.except(flagged).isEmpty && flagged.except(base).isEmpty)
 

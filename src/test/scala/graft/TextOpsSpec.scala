@@ -383,6 +383,20 @@ class TextOpsSpec extends AnyFunSuite {
       "http://h.io/a", "http://h.io/a/b?y=2&z=1"))
   }
 
+  test("url canonicalize: malformed urls pass through and keep distinct canonical ids") {
+    import spark.implicits._
+    val d = Seq((1L, "mailto:a@example.com"), (2L, "/relative/path?q=1"),
+      (3L, "example.com/no-scheme"), (4L, "HTTP://Example.com:80/x"))
+      .toDF("doc_id", "url")
+    val out = graft.textops.UrlNormalize.dedupByCanonical(d)
+      .select("doc_id", "canonical_url", "canonical_id").as[(Long, String, Long)]
+      .collect().map(r => r._1 -> ((r._2, r._3))).toMap
+    assert(out(1L) === (("mailto:a@example.com", 1L)))
+    assert(out(2L) === (("/relative/path?q=1", 2L)))
+    assert(out(3L) === (("example.com/no-scheme", 3L)))
+    assert(out(4L) === (("http://example.com/x", 4L)))
+  }
+
   test("decontaminate: 13-gram overlap vs benchmark slice, self-matches excluded") {
     import spark.implicits._
     val text13 = "a b c d e f g h i j k l m" // exactly one 13-gram
