@@ -6,7 +6,8 @@ import org.apache.spark.sql.SparkSession
  * Session factory with the configuration the pipeline is designed for:
  * AQE on (runtime re-planning + skew-join splitting for head surface
  * forms, SURVEY.md §4), shuffle partitions sized for the local core
- * count rather than the 200 default, UTC for oracle parity.
+ * count rather than the 200 default, joins that reuse a partitioning on
+ * a subset of their keys, UTC for oracle parity.
  */
 object GraftSession {
 
@@ -20,11 +21,11 @@ object GraftSession {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
       .config("spark.sql.session.timeZone", "UTC")
-      // entity_contexts is bucketed by res_id but joined on
-      // (res_id, token_id): allow co-partitioning on a subset of the
-      // join keys so the bucketed model side feeds the context join
-      // without a re-shuffle (the probe side shuffles by res_id to the
-      // bucket layout instead — RunnerSpec asserts the plan)
+      // the scored DAG partitions its document side by (url, para_idx,
+      // win) at the candidate ⋈ doc-token join: letting an aggregate or
+      // join on a superset of those keys reuse that partitioning spares
+      // the context-score aggregate and the NIL-context join a re-shuffle
+      // each (two exchanges; ScaleDesignSpec asserts the plan)
       .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
       // native Catalyst expressions (fnv_fingerprint) as SQL functions
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")

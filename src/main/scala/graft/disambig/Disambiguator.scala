@@ -21,8 +21,8 @@ import graft.util.TextUtil
  *  - spots ⋈ surface_forms / candidates: dims broadcast where they fit,
  *    otherwise hash join on sf_id with AQE skew splitting ("USA" keys);
  *  - doc_tokens ⋈ entity_contexts: the one genuinely big join, keyed
- *    (res_id, token_id); entity_contexts is written bucketed by res_id
- *    so the shuffle is one-sided at annotate time;
+ *    (res_id, token_id); entity_contexts broadcasts where it fits,
+ *    otherwise both sides shuffle on the join keys;
  *  - all per-spot decisions are window functions over (url, para, offset)
  *    — one shuffle, then rank, lead and softmax reuse the same sort.
  */

@@ -16,11 +16,9 @@ import graft.util.TextUtil
  *  - every aggregation is a map-side-combinable sum (partial agg free);
  *    the head-surface-form skew case additionally goes through
  *    [[saltedSum]] (two-phase salt → final) per the north rule;
- *  - dense IDs come from `row_number() over (order by name)` — stable
- *    across runs and parallelism (SURVEY.md §7.4(6)), never
- *    monotonically_increasing_id;
- *  - model tables are written sorted/bucketed by their join key
- *    downstream (Pipeline) so annotate-time joins avoid re-shuffles.
+ *  - dense IDs come from [[denseIds]]: a range-partitioned rank plus
+ *    driver-side partition offsets, stable across runs and parallelism
+ *    (SURVEY.md §7.4(6)), never monotonically_increasing_id.
  */
 object ModelBuild {
 
@@ -56,16 +54,10 @@ object ModelBuild {
       .drop("_pid", "_rn")
     // Materialize + truncate lineage so the pinned intermediate can be
     // freed immediately (otherwise each denseIds call leaks one cached
-    // copy of the dimension table for the session's lifetime). When the
-    // caller configured a reliable checkpoint dir (Runner points it at
-    // the stage root it owns), cut there — executor-local blocks
-    // (localCheckpoint) disappear with a lost executor, which at
-    // 100×-dictionary deployment scale means recomputing the dimension
-    // mid-job; the local variant remains the single-JVM fallback
-    // (VERDICT r3 item 8).
-    val out =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) cut.checkpoint(true)
-      else cut.localCheckpoint(true)
+    // copy of the dimension table for the session's lifetime). A lost
+    // block fails the job loudly; durability is the caller's stage
+    // commit (Pipeline.stage), not this cut.
+    val out = cut.localCheckpoint(true)
     withRn.unpersist()
     out
   }
@@ -89,8 +81,9 @@ object ModelBuild {
    * reference's getEndOfChainURI (/root/reference index/.../db/
    * WikipediaToDBpediaClosure.scala:106-116): follow the chain until no
    * next hop or the next hop was already visited (cycles stop at the
-   * last new node). Chains are short (≤ ~8 hops), so the driver loop
-   * runs a handful of tiny broadcast joins.
+   * last new node). The driver loop runs one tiny broadcast join per
+   * hop of the longest chain, with no hop cap: a step only moves to a
+   * node not yet on its path, so every chain stops.
    */
   def redirectClosure(redirects: DataFrame): DataFrame = {
     val edges = redirects.select(col("subj").as("e_from"), col("obj").as("e_to"))
@@ -99,10 +92,8 @@ object ModelBuild {
     var cur = edges.select(
       col("e_from").as("from"), col("e_to").as("to"),
       array(col("e_from"), col("e_to")).as("path"))
-    var prev: DataFrame = null
     var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < 16) {
+    while (changed > 0) {
       val stepped = cur.join(broadcast(edges), cur("to") === edges("e_from"), "left")
         .withColumn("next",
           when(col("e_to").isNull || array_contains(col("path"), col("e_to")), lit(null))
@@ -113,19 +104,19 @@ object ModelBuild {
           when(col("next").isNull, col("path"))
             .otherwise(array_union(col("path"), array(col("next")))).as("path"),
           col("next").isNotNull.as("moved"))
-        .cache()
+        // cut lineage every hop: cached iterates would nest each other's
+        // plans, and the plan description doubles per hop (a 20-hop chain
+        // exhausts the driver heap). Lazy, so the count below is the one
+        // job that materializes it; the ContextCleaner frees an iterate's
+        // blocks once nothing references it.
+        .localCheckpoint(false)
       changed = stepped.filter(col("moved")).count()
-      // the new iterate is materialized: drop the previous one so repeated
-      // model builds in a long session don't accumulate ≤16 cached frames
-      if (prev != null) prev.unpersist()
-      prev = stepped
       cur = stepped.drop("moved")
-      iter += 1
     }
-    // Truncate lineage (the final plan nests `iter` joins) and free the
-    // last iterate + the edges dim — callers cache the returned closure.
+    // Checkpoint the closure without its path column, so the last iterate
+    // is unreferenced, and free the edges dim — callers materialize the
+    // closure.
     val out = cur.select(col("from"), col("to")).localCheckpoint(true)
-    if (prev != null) prev.unpersist()
     edges.unpersist()
     out
   }
@@ -196,7 +187,7 @@ object ModelBuild {
 
   // ---- A3: candidate map -----------------------------------------------
 
-  /** pairCounts keyed by (sf_id, res_id) — the salted/bucketed sf→URI map. */
+  /** pairCounts keyed by (sf_id, res_id) — the salted sf→URI map. */
   def candidates(resolvedOccs: DataFrame,
                  sfs: Dataset[SurfaceFormRow],
                  res: Dataset[ResourceRow]): Dataset[CandidateRow] = {

@@ -6,11 +6,13 @@ import org.apache.spark.sql.functions._
 
 /**
  * Stage orchestration with Iceberg-style per-stage checkpoints: every
- * stage writes parquet + a commit marker carrying its row count; a
- * committed stage is skipped on re-run, so the
- * pipeline resumes idempotently from any completed table (north rule;
- * the reference's CreateSpotlightModel similarly checkpoints each store
- * to disk between stages, CreateSpotlightModel.scala:143-228).
+ * stage writes parquet once, plus a commit marker carrying its row
+ * count; a committed stage is skipped on re-run, so the pipeline resumes
+ * idempotently from any completed table (north rule; the reference's
+ * CreateSpotlightModel similarly writes each store once, to disk,
+ * between stages, CreateSpotlightModel.scala:143-228). The table a stage
+ * returns reads the committed files, so the commit is also the stage's
+ * lineage cut.
  *
  * Layout per stage dir:
  *   <root>/<stage>/           parquet files
@@ -44,24 +46,6 @@ object Pipeline {
       spark.read.schema(df.schema).parquet(dir)
     }
   }
-
-  /** Sorted bucketed write for the model tables re-used by every annotate
-   *  run (candidates by sf_id, entity_contexts by res_id — SURVEY.md §4(2)).
-   *  Bucketing requires saveAsTable; falls back to sorted parquet when no
-   *  warehouse/catalog is configured. */
-  def writeBucketed(df: DataFrame, table: String, bucketCol: String, buckets: Int): Unit = {
-    df.repartition(buckets, col(bucketCol))
-      .sortWithinPartitions(bucketCol)
-      .write.mode("overwrite")
-      .format("parquet")
-      .bucketBy(buckets, bucketCol)
-      .sortBy(bucketCol)
-      .saveAsTable(table)
-  }
-
-  /** Catalog-safe table name for a run root's bucketed model table. */
-  def bucketedTableName(root: String, stage: String): String =
-    ("graft_" + root.replaceAll("[^A-Za-z0-9]", "_") + "_" + stage).toLowerCase
 
   /** Remove a stage's commit marker (used by the resume test to simulate
    *  a mid-pipeline failure). */

@@ -24,14 +24,13 @@ import org.apache.spark.sql.functions._
  *  - Per-iteration lineage is truncated with a LAZY checkpoint that
  *    the convergence-signature action materializes — without truncation
  *    the plan doubles every round and Catalyst analysis dominates past
- *    ~10 iterations. When the session has a reliable checkpoint dir
- *    (pipeline.Runner provisions a run-scoped one), the cut is a
- *    reliable `checkpoint`, so a lost executor mid-iteration replays
- *    rounds from storage instead of restarting the loop — the same
- *    switch ModelBuild.denseIds takes. The single-JVM fallback stays
- *    localCheckpoint at one job per round; reliable adds the checkpoint
- *    write job Spark schedules after the materializing action, the
- *    inherent durability cost.
+ *    ~10 iterations. When the caller has set a reliable checkpoint dir
+ *    on the session, the cut is a reliable `checkpoint`, so a lost
+ *    executor mid-iteration replays rounds from storage instead of
+ *    restarting the loop. Without one it stays localCheckpoint at one
+ *    job per round; reliable adds the checkpoint write job Spark
+ *    schedules after the materializing action, the inherent durability
+ *    cost.
  *  - The driver-side loop action per round is a single 2-column
  *    aggregate row (edge count + order-independent xxhash64 sum), not a
  *    collect of data: convergence = the signature of the edge set
@@ -102,8 +101,7 @@ object ConnectedComponents {
     // materialized — GC + ContextCleaner would get there eventually, but
     // an 11-round run should hold 2 edge-set copies, not 11. (Under the
     // reliable path unpersist is a no-op — checkpoint files live in the
-    // run-scoped dir the Runner owns and deletes — so freeing stays
-    // correct on both paths.)
+    // caller's checkpoint dir — so freeing stays correct on both paths.)
     def checkpointedRdd(df: DataFrame) =
       df.queryExecution.analyzed.collectFirst {
         case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd

@@ -54,6 +54,14 @@ class EndToEndSpec extends AnyFunSuite {
     assert(c("Chain_1") === "Topic_10") // 3-hop chain
     assert(c("Loop_A") === "Loop_B") // cycle: ends at last new node
     assert(c("Loop_B") === "Loop_A")
+
+    // a 20-hop chain resolves to its end, not to an intermediate node
+    import spark.implicits._
+    val chain = (0 until 20).map(i => (s"Hop_$i", s"Hop_${i + 1}")).toDF("subj", "obj")
+    val long = ModelBuild.redirectClosure(chain).collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(long("Hop_0") === "Hop_20")
+    assert(long("Hop_19") === "Hop_20")
   }
 
   test("model tables: counts consistent and skew sf present") {

@@ -7,8 +7,9 @@ import graft.pipeline.{Pipeline, Runner}
 import graft.sources.SyntheticCorpus
 
 /** The north-rule resume test: kill the pipeline after stage N (delete
-  * downstream commits), rerun, assert identical outputs and that
-  * committed upstream stages were skipped (mtime unchanged). */
+  * downstream commits), rerun, assert identical outputs, that committed
+  * upstream stages were skipped (mtime unchanged) and that the run
+  * leaves no cache or catalog table behind. */
 class RunnerSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = GraftSession.local(4)
@@ -23,6 +24,7 @@ class RunnerSpec extends AnyFunSuite {
 
   test("full DAG commits every stage; resume after mid-pipeline failure is idempotent") {
     val root = Files.createTempDirectory("graft_runner").toString
+    spark.catalog.clearCache() // specs share the session: start from an empty cache
     val r1 = runAll(root)
     val triples1 = r1.triples.collect().toSet
     assert(triples1.nonEmpty)
@@ -57,130 +59,11 @@ class RunnerSpec extends AnyFunSuite {
       java.nio.file.Paths.get(s"$root/surface_forms/_graft_commit.json"))
     assert(sfMarkerAfter === sfMarkerBefore)
 
-    // run-scoped reliable checkpoints: deleted once every stage commits
-    // (stage tables are parquet-backed, nothing references them), so a
-    // run leaks no dictionary-sized checkpoint copies under its root
-    assert(!Files.exists(java.nio.file.Paths.get(s"$root/_checkpoints")),
-      "reliable checkpoints must be cleaned up after a successful run")
-  }
-
-  test("a second run on a different root checkpoints under ITS OWN root") {
-    val rootA = Files.createTempDirectory("graft_ckpt_a").toString
-    val rootB = Files.createTempDirectory("graft_ckpt_b").toString
-    runAll(rootA)
-    // run B must checkpoint under ITS OWN root, not stay pinned to
-    // rootA (the round-4 first-run-wins defect), and both runs must
-    // leave no checkpoint data behind
-    runAll(rootB)
-    assert(!Files.exists(java.nio.file.Paths.get(s"$rootA/_checkpoints")))
-    assert(!Files.exists(java.nio.file.Paths.get(s"$rootB/_checkpoints")))
-    // the session-level dir afterwards points under the LAST run's root
-    val d = spark.sparkContext.getCheckpointDir
-    assert(d.isDefined && d.get.contains("graft_ckpt_b"))
-  }
-
-  test("runner model tables are bucketed; joins don't exchange the model side") {
-    val root = Files.createTempDirectory("graft_bkt").toString
-    val r = runAll(root)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      // force shuffle joins: at scale the model tables exceed broadcast
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      import spark.implicits._
-      val exchangeRe = "(?m)^\\s*[+:]?[- ]*Exchange hashpartitioning".r
-
-      val spots = Seq((1, "x"), (2, "y")).toDF("sf_id", "sf")
-      val j1 = r.model.candidates.toDF().join(spots, Seq("sf_id"))
-      val p1 = j1.queryExecution.executedPlan.toString
-      assert(p1.contains("Bucketed: true"), s"candidates scan not bucketed:\n$p1")
-      assert(exchangeRe.findAllIn(p1).length === 1,
-        s"expected 1 exchange (probe side only):\n$p1")
-
-      // context join keys (res_id, token_id) ⊃ bucket col res_id: the
-      // bucketed side must still feed the join shuffle-free
-      val probe = Seq((1, 2, 1L), (3, 4, 2L)).toDF("res_id", "token_id", "q")
-      val j2 = r.model.entityContexts.toDF().join(probe, Seq("res_id", "token_id"))
-      val p2 = j2.queryExecution.executedPlan.toString
-      assert(p2.contains("Bucketed: true"), s"entity_contexts scan not bucketed:\n$p2")
-      assert(exchangeRe.findAllIn(p2).length === 1,
-        s"expected 1 exchange (probe side only):\n$p2")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-  }
-
-  test("annotate-time joins keep the bucketed model side shuffle-free") {
-    // VERDICT r2 item 7: the REAL annotate-time join fragments (not toy
-    // probes) against the bucketed tables as Runner returns them — the
-    // plan must read candidates/entity_contexts Bucketed and feed the
-    // join without a ShuffleExchange on the bucketed side.
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoinExec}
-    val root = Files.createTempDirectory("graft_bkt_real").toString
-    val r = runAll(root)
-    val prevB = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val prevA = spark.conf.get("spark.sql.adaptive.enabled")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.enabled", "false") // walkable plan tree
-      spark.conf.set("spark.sql.shuffle.partitions", "32")  // = bucket count
-      import spark.implicits._
-      // fresh bucketed-table reads (what Runner.run hands back pre-cache)
-      val cands = spark.table(Pipeline.bucketedTableName(root, "candidates"))
-        .as[graft.model.CandidateRow]
-      val ctxs = spark.table(Pipeline.bucketedTableName(root, "entity_contexts"))
-        .as[graft.model.EntityContextRow]
-      val bc = spark.sparkContext.broadcast(
-        graft.spot.Spotter.buildAutomaton(r.model.surfaceForms))
-      val gated = graft.spot.Spotter.gatedSpots(
-        graft.spot.Spotter.spots(r.model.paragraphs, bc), r.model.surfaceForms)
-      val sc = graft.disambig.Disambiguator.spotCandidates(
-        gated, r.model.surfaceForms, cands)
-      val docTokens = graft.disambig.Disambiguator.docTokenHistogram(
-        r.model.paragraphs, r.model.tokenTypes)
-      val scored = graft.disambig.Disambiguator.scored(
-        sc, docTokens, ctxs, r.model.resources, r.model.totals)
-
-      def bucketedSide(p: SparkPlan, tableFrag: String): Option[SparkPlan] = {
-        // the Runner cached these tables: the scan may sit behind an
-        // InMemoryTableScan (cache preserves the bucketed partitioning),
-        // so descend into cached plans too
-        def isTarget(s: FileSourceScanExec): Boolean =
-          s.relation.bucketSpec.isDefined &&
-            s.relation.location.rootPaths.exists(_.toString.contains(tableFrag))
-        def hasBucketedScan(n: SparkPlan): Boolean = n.collectFirst {
-          case s: FileSourceScanExec if isTarget(s) => s
-          case m: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-            if m.relation.cachedPlan.collectFirst {
-              case s: FileSourceScanExec if isTarget(s) => s }.isDefined => m
-        }.isDefined
-        // of all shuffle joins whose side reaches the scan, keep the
-        // innermost one: the side that IS the scan (no nested joins), not
-        // an upstream join whose whole subtree merely contains it
-        val sides = p.collect {
-          case j: SortMergeJoinExec => j.children.filter(hasBucketedScan)
-          case j: ShuffledHashJoinExec => j.children.filter(hasBucketedScan)
-        }.flatten
-        sides.find(c => c.collectFirst {
-          case jj: SortMergeJoinExec => jj
-          case jj: ShuffledHashJoinExec => jj
-          case jj: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec => jj
-        }.isEmpty)
-      }
-      val plan = scored.queryExecution.executedPlan
-      for (frag <- Seq("candidates", "entity_contexts")) {
-        val side = bucketedSide(plan, frag)
-        assert(side.isDefined, s"no shuffle join over a bucketed $frag scan:\n$plan")
-        val exchanges = side.get.collect { case e: ShuffleExchangeExec => e }
-        assert(exchanges.isEmpty,
-          s"bucketed $frag side re-shuffled before its join:\n${side.get}")
-      }
-      // and the whole thing still computes
-      assert(scored.count() > 0)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevB)
-      spark.conf.set("spark.sql.adaptive.enabled", prevA)
-      spark.conf.set("spark.sql.shuffle.partitions", "4")
-    }
+    // the run leaves nothing behind in the session: no cached table
+    // (model read-backs, scored DAG) and no catalog table
+    assert(spark.sharedState.cacheManager.isEmpty, "Runner.run left cached data")
+    val tables = spark.catalog.listTables().collect().map(_.name).filter(_.startsWith("graft_"))
+    assert(tables.isEmpty, s"Runner.run left catalog tables: ${tables.mkString(", ")}")
   }
 
   test("partitioned triple sink writes pred dirs + counters") {

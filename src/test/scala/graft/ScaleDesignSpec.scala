@@ -7,8 +7,8 @@ import graft.modelbuild.ModelBuild
 
 /**
  * Scale-design evidence (SURVEY.md §4, §7.4(2)): the skew fixture must
- * not funnel a hot key through one reducer, bucketed model tables must
- * join without re-shuffling the bucketed side, and the C4 retry path
+ * not funnel a hot key through one reducer, the scored DAG's joins reuse
+ * a partitioning on a subset of their keys, and the C4 retry path
  * resolves variant surface forms.
  */
 class ScaleDesignSpec extends AnyFunSuite {
@@ -43,38 +43,43 @@ class ScaleDesignSpec extends AnyFunSuite {
     assert(total === 50000L)
   }
 
-  test("bucketed model tables join without exchanging the bucketed side") {
-    import spark.implicits._
-    spark.sql("DROP TABLE IF EXISTS cand_bucketed")
-    // scrub any orphaned location from a previous JVM (DROP above only
-    // removes what the current catalog knows about)
-    val loc = new java.io.File("/tmp/graft-warehouse/cand_bucketed")
-    if (loc.exists()) {
-      java.nio.file.Files.walk(loc.toPath)
-        .sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
+  test("scored DAG: partial-key co-partitioning saves shuffles") {
+    // the context-score aggregate and the spot ⋈ context-score join keep
+    // the (url, para_idx, win) partitioning of the candidate ⋈ doc-token
+    // join, so neither they nor the NIL-context join re-shuffle
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import graft.pipeline.{Annotate, ModelGraph, Runner}
+    import graft.sources.SyntheticCorpus
+    // the model as Runner.run returns it: committed parquet read-backs
+    val root = java.nio.file.Files.createTempDirectory("graft_copart").toString
+    val (m, _) = ModelGraph.build(spark, SyntheticCorpus.webPages(spark, 40),
+      SyntheticCorpus.redirectsNt, SyntheticCorpus.disambiguationsNt,
+      SyntheticCorpus.instanceTypesNt, graft.util.TextUtil.IdentityStemmer,
+      withTotalCounts = true, Runner.checkpointed(spark, root))
+    val key = "spark.sql.requireAllClusterKeysForCoPartition"
+    val threshold = "spark.sql.autoBroadcastJoinThreshold"
+    def shuffles(requireAll: Boolean): Int = {
+      spark.conf.set(key, requireAll.toString)
+      val plan = Annotate.scoredOn(spark, m, m.paragraphs).queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.initialPlan
+        case p => p
+      }
+      plan.collect { case e: ShuffleExchangeExec => e }.size
     }
-    val cands = (1 to 1000).map(i => (i % 100, i, i.toLong))
-      .toDF("sf_id", "res_id", "cooc_count")
-    graft.pipeline.Pipeline.writeBucketed(cands, "cand_bucketed", "sf_id", 8)
-
-    // force a shuffle join (with broadcast allowed the planner broadcasts
-    // the tiny probe side and bucketing is moot); the point at scale is a
-    // big-big join where the bucketed side must not re-shuffle
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    val (prev, prevThreshold) = (spark.conf.get(key), spark.conf.get(threshold))
     try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val spots = (1 to 50).map(i => (i, s"sf$i")).toDF("sf_id", "sf")
-      val joined = spark.table("cand_bucketed").join(spots, Seq("sf_id"))
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(plan.contains("Bucketed: true"), s"bucketed scan not used:\n$plan")
-      // exactly one Exchange — the non-bucketed probe side; the bucketed
-      // candidates scan feeds the join shuffle-free
-      val exchanges = "(?m)^\\s*[+:]?[- ]*Exchange hashpartitioning"
-        .r.findAllIn(plan).length
-      assert(exchanges === 1, s"expected 1 exchange (probe side only):\n$plan")
-      assert(joined.count() === 500) // 50 sf_ids × 10 candidates each
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
+      // the at-scale shape: model tables broadcast, document-side joins
+      // shuffle. The test corpus's tables are all kilobytes, so a lower
+      // threshold than the session's 64 MB draws the same line.
+      spark.conf.set(threshold, "200000")
+      val (subset, all) = (shuffles(requireAll = false), shuffles(requireAll = true))
+      info(s"shuffle exchanges: $subset with partial-key co-partitioning, $all without")
+      assert(all - subset === 2)
+    } finally {
+      spark.conf.set(key, prev)
+      spark.conf.set(threshold, prevThreshold)
+    }
   }
 
   test("C4 retry resolves variant surface forms when enabled") {
