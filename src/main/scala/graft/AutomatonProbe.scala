@@ -26,8 +26,11 @@ object AutomatonProbe {
         else if (i % 3 == 1) s"$w1 Of The ${(h >> 4) % 10000}"
         else s"Form_$h"
       }.distinct
+      // with the per-pattern (sf_id, annotated, total) payload the
+      // spotter's automaton carries
+      val entries = dict.zipWithIndex.map { case (sf, i) => (sf, i + 1, 10L, 20L) }
       val t0 = System.nanoTime()
-      val ac = graft.spot.AhoCorasick.build(dict, caseSensitive = true)
+      val ac = graft.spot.AhoCorasick.withPayload(entries, caseSensitive = true)
       val buildSec = (System.nanoTime() - t0) / 1e9
       val bos = new java.io.ByteArrayOutputStream()
       val oos = new java.io.ObjectOutputStream(bos)

@@ -21,11 +21,11 @@ object GraftSession {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
       .config("spark.sql.session.timeZone", "UTC")
-      // the scored DAG partitions its document side by (url, para_idx,
-      // win) at the candidate ⋈ doc-token join: letting an aggregate or
-      // join on a superset of those keys reuse that partitioning spares
-      // the context-score aggregate and the NIL-context join a re-shuffle
-      // each (two exchanges; ScaleDesignSpec asserts the plan)
+      // the scored DAG partitions its spot-candidate rows and doc-token
+      // histogram by paragraph (url, para_idx): letting the context join
+      // on (url, para_idx, win) reuse that partitioning spares both of
+      // its sides a re-shuffle (two exchanges; ScaleDesignSpec asserts
+      // the plan)
       .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
       // native Catalyst expressions (fnv_fingerprint) as SQL functions
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")

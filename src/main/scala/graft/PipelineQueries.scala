@@ -28,7 +28,12 @@ object PipelineQueries {
     val bc = s.sparkContext.broadcast(graft.spot.Spotter.buildAutomaton(mm.surfaceForms))
     graft.spot.Spotter.gatedSpots(
       graft.spot.Spotter.allSpots(mm.paragraphs, bc), mm.surfaceForms)
+      .drop(SpotIds: _*)
   }
+
+  /** The id columns spots carry to candidate generation (see
+    * [[graft.spot.Spotter.spots]]); spot outputs are emitted without them. */
+  private val SpotIds = Seq("sf_id", "annotated_count")
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "p_extracted" -> ((s, _) => {
@@ -76,8 +81,8 @@ object PipelineQueries {
     "p_raw_spots" -> ((s, _) =>
       // pre-gate automaton output (rows-only: the automaton itself is
       // spec-verified); both gate oracles re-derive from this
-      SparkEntry.rawSpots(s).drop("spot_prob")),
-    "p_spots" -> ((s, _) => SparkEntry.gated(s)),
+      SparkEntry.rawSpots(s).drop("spot_prob" +: SpotIds: _*)),
+    "p_spots" -> ((s, _) => SparkEntry.gated(s).drop(SpotIds: _*)),
     "p_scored" -> ((s, _) => SparkEntry.scored(s).drop("types", "path")),
     "p_top1" -> ((s, _) => Disambiguator.best(SparkEntry.scored(s)).drop("types")),
     "p_annotations" -> ((s, _) =>
@@ -838,7 +843,8 @@ object PipelineQueries {
              sup.support, coalesce(typ.types, '') AS types
       FROM sup LEFT JOIN typ ON sup.uri = typ.uri""",
     // A3: pair counts on the resolved (sf, uri) keyed through the
-    // independently-verified dimension IDs.
+    // independently-verified dimension IDs, and each pair's rank within
+    // its sf (cooc_count desc, res_id).
     "p_candidates" -> s"""
       WITH resolved AS (
         SELECT o.sf, coalesce(c."to", o.uri) AS uri, o.weight
@@ -850,11 +856,14 @@ object PipelineQueries {
           WHERE n.pred = 'http://dbpedia.org/ontology/wikiPageDisambiguates'
             AND replace(n.subj,'http://dbpedia.org/resource/','') = r.uri)
       )
-      SELECT s.sf_id, r.res_id, CAST(SUM(n.weight) AS BIGINT) AS cooc_count
-      FROM nodis n
-      JOIN ${p("p_surface_forms")} s ON n.sf = s.sf
-      JOIN ${p("p_resources")} r ON n.uri = r.uri
-      GROUP BY s.sf_id, r.res_id""",
+      SELECT *, CAST(row_number() OVER (PARTITION BY sf_id
+                  ORDER BY cooc_count DESC, res_id) AS INT) AS cand_rank
+      FROM (
+        SELECT s.sf_id, r.res_id, CAST(SUM(n.weight) AS BIGINT) AS cooc_count
+        FROM nodis n
+        JOIN ${p("p_surface_forms")} s ON n.sf = s.sf
+        JOIN ${p("p_resources")} r ON n.uri = r.uri
+        GROUP BY s.sf_id, r.res_id)""",
     // R6: md5-derived bucket split — DuckDB reproduces the exact bucket
     // arithmetic (ModelBuild.hashSplit uses the first 60 md5 bits).
     "p_train_test_split" -> s"""
@@ -1215,7 +1224,8 @@ object PipelineQueries {
     // every fixture paragraph — all are under the 200-word cap, asserted
     // by the fixture design — so the occurrence context IS the paragraph
     // stream emitted in p_doc_tokens; only tokenization itself passes
-    // through, the redirect/disambig/weight/sum arithmetic is recomputed).
+    // through, the redirect/disambig/weight/sum arithmetic is recomputed),
+    // each row with its resource's total token count.
     "p_entity_contexts" -> s"""
       WITH resolved AS (
         SELECT o.url, o.para_idx, coalesce(c."to", o.uri) AS uri, o.weight
@@ -1229,11 +1239,13 @@ object PipelineQueries {
       tokcnt AS (
         SELECT url, para_idx, token_id, SUM(q_cnt) AS q
         FROM ${p("p_doc_tokens")} GROUP BY 1, 2, 3)
-      SELECT rr.res_id, t.token_id, CAST(SUM(n.weight * t.q) AS BIGINT) AS count
-      FROM nodis n
-      JOIN ${p("p_resources")} rr ON n.uri = rr.uri
-      JOIN tokcnt t ON n.url = t.url AND n.para_idx = t.para_idx
-      GROUP BY 1, 2""",
+      SELECT *, CAST(SUM(count) OVER (PARTITION BY res_id) AS BIGINT) AS res_tok_total
+      FROM (
+        SELECT rr.res_id, t.token_id, CAST(SUM(n.weight * t.q) AS BIGINT) AS count
+        FROM nodis n
+        JOIN ${p("p_resources")} rr ON n.uri = rr.uri
+        JOIN tokcnt t ON n.url = t.url AND n.para_idx = t.para_idx
+        GROUP BY 1, 2)""",
     // D3+D5+R1-R3 re-derived end-to-end: candidates from spots ×
     // dictionary × pair counts (top-20 by prior), the generative context
     // score recomputed token-by-token from p_doc_tokens with Laplace

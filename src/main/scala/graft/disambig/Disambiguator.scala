@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.model._
 import graft.modelbuild.ModelBuild
+import graft.spot.Spotter
 import graft.util.TextUtil
 
 /**
@@ -18,13 +19,20 @@ import graft.util.TextUtil
  * replaced by joins/windows/aggregations.
  *
  * Shuffle plan (scale design, SURVEY.md §4):
- *  - spots ⋈ surface_forms / candidates: dims broadcast where they fit,
- *    otherwise hash join on sf_id with AQE skew splitting ("USA" keys);
- *  - doc_tokens ⋈ entity_contexts: the one genuinely big join, keyed
- *    (res_id, token_id); entity_contexts broadcasts where it fits,
- *    otherwise both sides shuffle on the join keys;
- *  - all per-spot decisions are window functions over (url, para, offset)
- *    — one shuffle, then rank, lead and softmax reuse the same sort.
+ *  - spots carry their surface form's id from the automaton match, so
+ *    the gate is a filter and spots ⋈ candidates joins on sf_id (the
+ *    smaller side broadcasts, otherwise a hash join with AQE skew
+ *    splitting for "USA" keys); the top-k prune is a filter on the
+ *    model's `cand_rank`. Only spots without an id (spot XML, external
+ *    spots) read surface_forms;
+ *  - the spot-candidate rows and the doc-token histogram are both
+ *    partitioned by paragraph (url, para_idx): the context join on
+ *    (url, para_idx, win), its aggregate and the per-spot windows over
+ *    (url, para_idx, offset) all reuse that partitioning (two shuffles
+ *    in all, see GraftSession's co-partitioning setting);
+ *  - candidates ⋈ entity_contexts on (res_id, token_id): entity_contexts
+ *    broadcasts where it fits, otherwise both sides shuffle on the join
+ *    keys. Its rows carry `res_tok_total`, so no request aggregates it.
  */
 object Disambiguator {
 
@@ -44,8 +52,6 @@ object Disambiguator {
       // (TextUtil.sentenceWindowStarts). Only affects paragraphs past
       // the oversize gate; the two modes are byte-identical below it.
       sentenceAlignedWindows: Boolean = false)
-
-  val sfNormalizeUdf = udf((sf: String) => TextUtil.sfNormalize(sf))
 
   // ---- paragraph token histogram (getQuery, DBTwoStepDisambiguator.scala:43-44)
 
@@ -84,19 +90,27 @@ object Disambiguator {
           if (sentenceAligned)
             TextUtil.contextWindowStarts(p.para_text, maxContextTokens, sentenceAligned = true)
           else TextUtil.SingleWindow
-        toks.iterator.zipWithIndex.collect {
+        // the paragraph's own histogram: the shuffle below moves one row
+        // per distinct (window, token), as a map-side combine would
+        val counts = scala.collection.mutable.LinkedHashMap.empty[(Int, String), Long]
+        toks.iterator.zipWithIndex.foreach {
           case (t, i) if !t.is_stop && TextUtil.isWordToken(t.token) =>
             val win =
               if (sentenceAligned)
                 (if (starts.length == 1) 0 else TextUtil.windowOf(starts, t.offset))
               else i / maxContextTokens
-            (p.url, p.para_idx, win,
-              stem(t.token.toLowerCase(java.util.Locale.ENGLISH)))
+            val key = (win, stem(t.token.toLowerCase(java.util.Locale.ENGLISH)))
+            counts(key) = counts.getOrElse(key, 0L) + 1L
+          case _ => ()
         }
+        counts.iterator.map { case ((win, token), n) => (p.url, p.para_idx, win, token, n) }
       }
-      .toDF("url", "para_idx", "win", "token")
+      .toDF("url", "para_idx", "win", "token", "n")
+      // partitioned by paragraph: the context join and the per-spot rank
+      // windows of [[scored]] reuse this partitioning
+      .repartition(col("url"), col("para_idx"))
       .groupBy("url", "para_idx", "win", "token")
-      .agg(count(lit(1)).as("q_cnt"))
+      .agg(sum("n").as("q_cnt"))
       .join(broadcast(tokens.toDF()), Seq("token"))
       .select("url", "para_idx", "win", "token_id", "q_cnt", "count")
       .withColumnRenamed("count", "tok_count")
@@ -105,18 +119,36 @@ object Disambiguator {
   // ---- C1/C2: candidate generation ---------------------------------------
 
   /**
-   * spots → (spot, sf_id) with the normalized-surface-form fallback of
-   * DBCandidateSearcher (core/.../db/DBCandidateSearcher.scala:25-44):
-   * exact lookup first; spots whose sf is unknown retry on the normalized
-   * key, which maps to the highest-annotated sf sharing that key
-   * (MemorySurfaceFormStore.scala:77-79). Then join the candidate map and
-   * keep the top `maxCandidates` by candidate prior
-   * (DBTwoStepDisambiguator.scala:145-150).
+   * spots → spot × candidate rows, top `maxCandidates` per spot by
+   * candidate prior (DBTwoStepDisambiguator.scala:145-150). The prior
+   * cooc/annotated_count has one denominator per surface form, so the
+   * top-k is the model's per-sf `cand_rank` (by cooc_count desc, res_id)
+   * and the prune is a filter on the candidates table.
+   *
+   * Spots carrying `sf_id`/`annotated_count` (the spot pass and the gate
+   * attach them, see [[Spotter.spots]]) join the candidate map on the id.
+   * Spots without them (spot XML, external spots) first resolve their
+   * form as DBCandidateSearcher does (core/.../db/DBCandidateSearcher.scala:
+   * 25-44): exact lookup first; spots whose sf is unknown retry on the
+   * normalized key, which maps to the highest-annotated sf sharing that
+   * key (MemorySurfaceFormStore.scala:77-79); then, with
+   * `morphologicalRetry`, the C4 variants.
    */
   def spotCandidates(spots: DataFrame,
                      sfs: Dataset[SurfaceFormRow],
                      cands: Dataset[CandidateRow],
                      cfg: Config = Config()): DataFrame = {
+    val resolved = if (Spotter.carriesSfIds(spots)) spots else resolveSurfaceForms(spots, sfs, cfg)
+    resolved
+      .join(cands.toDF().filter(col("cand_rank") <= cfg.maxCandidates).drop("cand_rank"),
+        Seq("sf_id"))
+      .withColumn("cand_prior", col("cooc_count").cast("double") / col("annotated_count"))
+  }
+
+  /** Spots without the id columns → (spot, sf_id, annotated_count); spots
+   *  whose form is found by none of the lookups drop out. */
+  private def resolveSurfaceForms(spots: DataFrame, sfs: Dataset[SurfaceFormRow],
+                                  cfg: Config): DataFrame = {
     val sfDim = sfs.select(col("sf"), col("sf_id"), col("annotated_count"))
     val exact = spots.join(broadcast(sfDim), Seq("sf"), "left")
 
@@ -129,42 +161,32 @@ object Disambiguator {
         col("annotated_count").as("n_annotated_count"))
 
     val withFallback = exact
-      .withColumn("_sf_norm", sfNormalizeUdf(col("sf")))
+      .withColumn("_sf_norm", ModelBuild.sfNormalizeUdf(col("sf")))
       .join(broadcast(normDim), col("_sf_norm") === col("sf_normalized"), "left")
       .withColumn("sf_id", coalesce(col("sf_id"), col("n_sf_id")))
       .withColumn("annotated_count", coalesce(col("annotated_count"), col("n_annotated_count")))
       .drop("_sf_norm", "sf_normalized", "n_sf_id", "n_annotated_count")
 
     val matched = withFallback.filter(col("sf_id").isNotNull)
-    val resolved =
-      if (!cfg.morphologicalRetry) matched
-      else {
-        // C4 second-chance join: explode the variants of still-unmatched
-        // spots, take the first variant IN PRIORITY ORDER (the- strip,
-        // a- strip, 's, s — the order sfVariants emits and the reference
-        // tries them, MergedOccurrencesDisambiguator.java:75-105) that
-        // hits the sf store. posexplode carries that priority index; an
-        // alphabetical tiebreak would pick a different variant whenever
-        // several hit.
-        val retried = withFallback.filter(col("sf_id").isNull)
-          .drop("sf_id", "annotated_count")
-          .select(col("*"), posexplode(sfVariantsUdf(col("sf"))).as(Seq("_vpos", "_var")))
-          .join(broadcast(sfDim.withColumnRenamed("sf", "_var")), Seq("_var"))
-          .withColumn("_vrk", row_number().over(
-            Window.partitionBy("url", "para_idx", "offset").orderBy("_vpos")))
-          .filter(col("_vrk") === 1)
-          .drop("_vrk", "_var", "_vpos")
-        matched.unionByName(retried)
-      }
-
-    resolved
-      .join(cands.toDF(), Seq("sf_id"))
-      .withColumn("cand_prior", col("cooc_count").cast("double") / col("annotated_count"))
-      .withColumn("_rk", row_number().over(
-        Window.partitionBy("url", "para_idx", "offset")
-          .orderBy(col("cand_prior").desc, col("res_id"))))
-      .filter(col("_rk") <= cfg.maxCandidates)
-      .drop("_rk")
+    if (!cfg.morphologicalRetry) matched
+    else {
+      // C4 second-chance join: explode the variants of still-unmatched
+      // spots, take the first variant IN PRIORITY ORDER (the- strip,
+      // a- strip, 's, s — the order sfVariants emits and the reference
+      // tries them, MergedOccurrencesDisambiguator.java:75-105) that
+      // hits the sf store. posexplode carries that priority index; an
+      // alphabetical tiebreak would pick a different variant whenever
+      // several hit.
+      val retried = withFallback.filter(col("sf_id").isNull)
+        .drop("sf_id", "annotated_count")
+        .select(col("*"), posexplode(sfVariantsUdf(col("sf"))).as(Seq("_vpos", "_var")))
+        .join(broadcast(sfDim.withColumnRenamed("sf", "_var")), Seq("_var"))
+        .withColumn("_vrk", row_number().over(
+          Window.partitionBy("url", "para_idx", "offset").orderBy("_vpos")))
+        .filter(col("_vrk") === 1)
+        .drop("_vrk", "_var", "_vpos")
+      matched.unionByName(retried)
+    }
   }
 
   // ---- C4: morphological retry variants ------------------------------------
@@ -196,32 +218,44 @@ object Disambiguator {
     m + log(exp(a - m) + exp(b - m))
   }
 
+  /** Sum of a double column with each term rounded to 18 decimals and
+   *  added as decimal(38,18): exact, so the result does not depend on
+   *  partitioning or shuffle order (a double sum does, in its last bits —
+   *  enough to flip an annotation sitting on an F1 threshold). */
+  private def exactSum(c: Column): Column =
+    sum(c.cast(org.apache.spark.sql.types.DecimalType(38, 18))).cast("double")
+
   /**
-   * Per-(paragraph, candidate-resource) context score
+   * Context score of each candidate row against its window
    * (GenerativeContextSimilarity.scala:19-78):
    *   p(token|res) = logSum(log λ + log pML, log(1−λ) + pLM)
    *   pML = count(res,token)/totalTokens(res)
    *   pLM = log(count(token)+1) − log(totalTokenCount + vocabSize)   [Laplace]
    *   score(res) = Σ_tokens log(q_cnt) + p         (−inf terms dropped)
+   * and the window's NIL score, the same sum with pML = 0
+   * (GenerativeContextSimilarity.nilScore:74-78), from the same token
+   * rows. totalTokens(res) is the entity_contexts row's `res_tok_total`.
    *
-   * Returns (url, para_idx, win, res_id, ctx_score) — scores are
-   * per-window: a candidate surfacing in several windows of one oversized
-   * paragraph scores against each window's own histogram (MAX_CONTEXT).
+   * `cands` holds (url, para_idx, win, res_id) plus any further columns;
+   * each row comes back once with `ctx_score` and `nil_ctx_score` added.
+   * Scores are per-window: a candidate surfacing in several windows of
+   * one oversized paragraph scores against each window's own histogram
+   * (MAX_CONTEXT); a window without dictionary tokens scores 0. Both
+   * sums are exact ([[exactSum]]).
    */
-  def contextScores(candRes: DataFrame, // distinct (url, para_idx, win, res_id)
+  def contextScores(cands: DataFrame,
                     docTokens: DataFrame,
                     contexts: Dataset[EntityContextRow],
                     totals: ModelBuild.Totals,
                     cfg: Config = Config()): DataFrame = {
-    val resTokenTotals = contexts.groupBy("res_id").agg(sum("count").as("res_tok_total"))
     val pLM = log(col("tok_count") + lit(1.0)) -
       log(lit((totals.totalTokenCount + totals.vocabularySize).toDouble))
-    val joined = candRes
-      .join(docTokens, Seq("url", "para_idx", "win"))
+    val pNil = log(lit(1 - cfg.lambda)) + pLM
+    val joined = cands
+      .join(docTokens, Seq("url", "para_idx", "win"), "left")
       .join(contexts.toDF().withColumnRenamed("count", "ctx_cnt"), Seq("res_id", "token_id"), "left")
-      .join(broadcast(resTokenTotals), Seq("res_id"), "left")
       .withColumn("pML",
-        when(col("ctx_cnt").isNull || col("res_tok_total").isNull || col("res_tok_total") === 0, lit(0.0))
+        when(col("ctx_cnt").isNull, lit(0.0))
           .otherwise(col("ctx_cnt").cast("double") / col("res_tok_total")))
       // pML = 0 ⇒ the λ·pML branch vanishes: p = log(1−λ) + pLM exactly,
       // matching logSum(−inf, x) = x in the reference. Branching first
@@ -229,22 +263,11 @@ object Disambiguator {
       .withColumn("p",
         when(col("pML") > 0,
           logSum(log(lit(cfg.lambda)) + log(col("pML")), log(lit(1 - cfg.lambda)) + pLM))
-          .otherwise(log(lit(1 - cfg.lambda)) + pLM))
-      .withColumn("term", log(col("q_cnt").cast("double")) + col("p"))
-    joined.groupBy("url", "para_idx", "win", "res_id")
-      .agg(sum("term").as("ctx_score"))
-  }
-
-  /** NIL context score per context window: the same sum with pML = 0
-   *  (GenerativeContextSimilarity.nilScore:74-78). */
-  def nilContextScores(docTokens: DataFrame, totals: ModelBuild.Totals,
-                       cfg: Config = Config()): DataFrame = {
-    val pLM = log(col("tok_count") + lit(1.0)) -
-      log(lit((totals.totalTokenCount + totals.vocabularySize).toDouble))
-    docTokens
-      .withColumn("term", log(col("q_cnt").cast("double")) + log(lit(1 - cfg.lambda)) + pLM)
-      .groupBy("url", "para_idx", "win")
-      .agg(sum("term").as("nil_ctx_score"))
+          .otherwise(pNil))
+      .withColumn("log_q", log(col("q_cnt").cast("double")))
+    joined.groupBy(cands.columns.map(col): _*)
+      .agg(coalesce(exactSum(col("log_q") + col("p")), lit(0.0)).as("ctx_score"),
+        coalesce(exactSum(col("log_q") + pNil), lit(0.0)).as("nil_ctx_score"))
   }
 
   // ---- D5 + R1-R3: mixture, NIL gate, rank, softmax ------------------------
@@ -263,20 +286,17 @@ object Disambiguator {
              res: Dataset[ResourceRow],
              totals: ModelBuild.Totals,
              cfg: Config = Config()): DataFrame = {
-    val candRes = spotCands.select("url", "para_idx", "win", "res_id").distinct()
-    val ctx = contextScores(candRes, docTokens, contexts, totals, cfg)
-    val nilCtx = nilContextScores(docTokens, totals, cfg)
+    // partitioned by paragraph, like docTokens: the context join, its
+    // aggregate and the rank windows below need no further shuffle
+    val ctx = contextScores(spotCands.repartition(col("url"), col("para_idx")),
+      docTokens, contexts, totals, cfg)
 
     val pE = log(col("support").cast("double") / lit(totals.totalSupport.toDouble))
     val pSgE = log(col("cand_prior")) // log(cooc/annotated): see note in DBTwoStepDisambiguator.scala:205-208
     val nilEntityScore = col("nil_ctx_score") + log(lit(1.0 / totals.totalAnnotated.toDouble))
 
-    val base = spotCands
-      .join(ctx, Seq("url", "para_idx", "win", "res_id"), "left")
-      .withColumn("ctx_score", coalesce(col("ctx_score"), lit(0.0)))
+    val base = ctx
       .join(broadcast(res.select("res_id", "uri", "support", "types")), Seq("res_id"))
-      .join(nilCtx, Seq("url", "para_idx", "win"), "left")
-      .withColumn("nil_ctx_score", coalesce(col("nil_ctx_score"), lit(0.0)))
       .withColumn("nil_score", nilEntityScore)
       .withColumn("similarity", Mixtures.unweighted(pSgE, col("ctx_score"), pE))
       .filter(!isnan(col("similarity")) && col("similarity") > col("nil_score"))
@@ -291,7 +311,9 @@ object Disambiguator {
         when(col("next_sim").isNull, lit(-1.0))
           .otherwise(exp(col("next_sim") - col("similarity"))))
 
-    // softmax over candidates ∪ {NIL} — stable logsumexp via window aggs
+    // softmax over candidates ∪ {NIL} — stable logsumexp via window aggs;
+    // the rows arrive in the rank window's (similarity desc, res_id)
+    // order, so these double sums add in a fixed order
     val mSim = greatest(max(col("similarity")).over(w), col("nil_score"))
     val mCtx = greatest(max(col("ctx_score")).over(w), col("nil_ctx_score"))
     ranked
@@ -351,11 +373,10 @@ object Disambiguator {
       .join(broadcast(nCand), Seq("url", "para_idx", "win"))
       .withColumn("icf",
         log(col("n_cand").cast("double") / col("n_cand_with_token")) + lit(1.0))
-    val resTotals = contexts.groupBy("res_id").agg(sum("count").as("ctx_len"))
+    // |context(res)| is the row's res_tok_total, the same on every row of res
     withIcf
       .groupBy("url", "para_idx", "win", "res_id")
-      .agg(sum(col("q_cnt") * col("tf") * col("icf")).as("raw"))
-      .join(broadcast(resTotals), Seq("res_id"))
+      .agg(sum(col("q_cnt") * col("tf") * col("icf")).as("raw"), max("res_tok_total").as("ctx_len"))
       .withColumn("tficf_score", col("raw") / col("ctx_len"))
       .select("url", "para_idx", "win", "res_id", "tficf_score")
   }

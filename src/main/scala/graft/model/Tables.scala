@@ -60,11 +60,14 @@ final case class ResourceRow(
     types: Seq[String])
 
 /** Candidate-map row: co-occurrence counts of (surface form, resource)
- *  (reference: MemoryCandidateMapStore.scala:14-34). */
+ *  (reference: MemoryCandidateMapStore.scala:14-34). `cand_rank` is the
+ *  row's rank within its surface form by (cooc_count desc, res_id): the
+ *  candidate-prior order, since the prior's denominator is per form. */
 final case class CandidateRow(
     sf_id: Int,
     res_id: Int,
-    cooc_count: Long)
+    cooc_count: Long,
+    cand_rank: Int)
 
 /** Token dictionary row (reference: MemoryTokenTypeStore.scala:17-39). */
 final case class TokenTypeRow(
@@ -73,11 +76,14 @@ final case class TokenTypeRow(
     count: Long)
 
 /** Per-entity token posting list — the inverted index re-expressing the
- *  reference's Lucene CONTEXT field / MemoryContextStore.scala:20-57. */
+ *  reference's Lucene CONTEXT field / MemoryContextStore.scala:20-57.
+ *  `res_tok_total` is the resource's total context-token count (the sum
+ *  of `count` over its rows), the denominator of its token probabilities. */
 final case class EntityContextRow(
     res_id: Int,
     token_id: Int,
-    count: Long)
+    count: Long,
+    res_tok_total: Long)
 
 /** Output of the spotting stage (reference: SurfaceFormOccurrence.scala:19-23).
  *  `win` is the spot's D1 MAX_CONTEXT window index — the ≤250-token slice

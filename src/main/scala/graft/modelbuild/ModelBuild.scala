@@ -187,7 +187,9 @@ object ModelBuild {
 
   // ---- A3: candidate map -----------------------------------------------
 
-  /** pairCounts keyed by (sf_id, res_id) — the salted sf→URI map. */
+  /** pairCounts keyed by (sf_id, res_id) — the salted sf→URI map — with
+   *  each pair's `cand_rank` within its sf (cooc_count desc, res_id), so
+   *  the annotate path's top-k candidate prune is a filter. */
   def candidates(resolvedOccs: DataFrame,
                  sfs: Dataset[SurfaceFormRow],
                  res: Dataset[ResourceRow]): Dataset[CandidateRow] = {
@@ -197,6 +199,8 @@ object ModelBuild {
       .join(broadcast(sfs.select("sf_id", "sf")), Seq("sf"))
       .join(broadcast(res.select(col("res_id"), col("uri"))), Seq("uri"))
       .select(col("sf_id"), col("res_id"), col("cnt").as("cooc_count"))
+      .withColumn("cand_rank", row_number().over(
+        Window.partitionBy("sf_id").orderBy(col("cooc_count").desc, col("res_id"))))
       .as[CandidateRow]
   }
 
@@ -258,6 +262,8 @@ object ModelBuild {
    * (narrowed) context, explode, dictionary-encode, sum. This DataFrame
    * IS the token→entity posting list that replaces the reference's
    * Lucene CONTEXT index (north star; MemoryContextStore.scala:20-57).
+   * Each row carries its resource's `res_tok_total`, the context-score
+   * denominator, so scoring never aggregates the whole table.
    */
   def entityContexts(resolvedOccs: DataFrame,
                      res: Dataset[ResourceRow],
@@ -279,6 +285,7 @@ object ModelBuild {
       .join(broadcast(res.select("res_id", "uri")), Seq("uri"))
       .join(broadcast(tokens.select("token_id", "token")), Seq("token"))
       .select("res_id", "token_id", "count")
+      .withColumn("res_tok_total", sum("count").over(Window.partitionBy("res_id")))
       .as[EntityContextRow]
   }
 

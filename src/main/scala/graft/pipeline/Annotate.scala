@@ -39,8 +39,11 @@ object Annotate {
 
   /** Build all model tables from a corpus + graph dumps through the
    *  shared [[ModelGraph]], caching each table in the session (the dims
-   *  are re-used by several downstream joins). Only paragraphs,
-   *  occurrences and the corrected surface forms are forced here. */
+   *  are re-used by several downstream joins). Each returned table is a
+   *  leaf over its columnar cache ([[org.apache.spark.sql.graft.CachedLeaf]]),
+   *  not the build lineage, so a request plans against the cached data
+   *  only. Only paragraphs, occurrences and the corrected surface forms
+   *  are forced here. */
   def buildModel(spark: SparkSession,
                  pages: Dataset[WebPage],
                  redirectsNt: Seq[String],
@@ -49,7 +52,7 @@ object Annotate {
                  withTotalCounts: Boolean = true,
                  stemmer: graft.util.TextUtil.Stemmer = graft.util.TextUtil.IdentityStemmer): Model =
     ModelGraph.build(spark, pages, redirectsNt, disambiguationsNt, instanceTypesNt,
-      stemmer, withTotalCounts, (_, compute) => compute().cache())._1
+      stemmer, withTotalCounts, (_, compute) => org.apache.spark.sql.graft.CachedLeaf(compute()))._1
 
   /**
    * D1 MAX_CONTEXT (= 250, DBTwoStepDisambiguator.scala:71): the

@@ -18,8 +18,10 @@ import graft.util.TextUtil
  *                  resources, candidates, entity_contexts} ─> totals
  *
  * Every table goes through the caller's [[Materialize]]:
- * [[Annotate.buildModel]] caches in the session, [[Runner.run]] commits
- * each table as a checkpointed stage. Intermediate caches are released
+ * [[Annotate.buildModel]] caches in the session and hands back a leaf
+ * over the cache, [[Runner.run]] commits each table as a checkpointed
+ * stage and reads it back; either way later stages and requests plan
+ * against the table, not its build lineage. Intermediate caches are released
  * here, for both callers: the page cache once paragraphs and occurrences
  * exist, the pre-correction surface-form cache once the corrected table
  * exists — repeated builds in one long-lived session must not accumulate

@@ -20,6 +20,12 @@ import scala.collection.mutable.ArrayBuffer
  *
  * Storage: flat arrays + per-node sorted char/next arrays, compact enough
  * to broadcast (the node table is linear in total dictionary characters).
+ * Each dictionary hit names its pattern (the ordinal in the build input),
+ * and an optional per-pattern payload `(sf_id, annotated_count,
+ * total_count)` rides along, so a match already knows its surface form:
+ * the spotter reads the id and the gate's counts off the automaton
+ * instead of joining the surface-form store (the reference's FSA spotter
+ * likewise resolves the form at match time, db/FSASpotter.scala:16-60).
  */
 final class AhoCorasick private (
     val caseSensitive: Boolean,
@@ -28,9 +34,21 @@ final class AhoCorasick private (
     chars: Array[Char],
     next: Array[Int],
     fail: Array[Int],
-    // dictionary-hit lengths per node, CSR as well (ends of patterns)
+    // dictionary hits per node, CSR as well (ends of patterns): the hit's
+    // length and the pattern's ordinal in the build input
     outStart: Array[Int],
-    outLen: Array[Int]) extends Serializable {
+    outLen: Array[Int],
+    outPat: Array[Int],
+    // per-pattern payload, indexed by ordinal (empty when built without)
+    sfIds: Array[Int],
+    annotatedCounts: Array[Long],
+    totalCounts: Array[Long]) extends Serializable {
+
+  /** True when every pattern carries an `(sf_id, annotated, total)` payload. */
+  def hasPayload: Boolean = sfIds.nonEmpty
+  def sfId(pattern: Int): Int = sfIds(pattern)
+  def annotatedCount(pattern: Int): Long = annotatedCounts(pattern)
+  def totalCount(pattern: Int): Long = totalCounts(pattern)
 
   @inline private def fold(c: Char): Char = if (caseSensitive) c else Character.toLowerCase(c)
 
@@ -69,7 +87,7 @@ final class AhoCorasick private (
       val kEnd = outStart(node + 1)
       while (k < kEnd) {
         val len = outLen(k)
-        out += AhoCorasick.Match(i - len + 1, len)
+        out += AhoCorasick.Match(i - len + 1, len, outPat(k))
         k += 1
       }
       i += 1
@@ -115,22 +133,35 @@ final class AhoCorasick private (
 
 object AhoCorasick {
 
-  final case class Match(start: Int, length: Int) {
+  /** A dictionary hit: `pattern` is the ordinal of the matched pattern in
+   *  the build input (the first one, when several fold to the same key). */
+  final case class Match(start: Int, length: Int, pattern: Int) {
     def end: Int = start + length // exclusive
   }
 
   /** Build from dictionary strings (driver-side; single pass trie + BFS
    *  failure links, then compaction into flat arrays). */
-  def build(patterns: IterableOnce[String], caseSensitive: Boolean): AhoCorasick = {
-    // mutable trie
+  def build(patterns: IterableOnce[String], caseSensitive: Boolean): AhoCorasick =
+    compile(patterns.iterator.toArray, caseSensitive,
+      Array.emptyIntArray, Array.emptyLongArray, Array.emptyLongArray)
+
+  /** Build with a per-pattern payload: `entries(i)` is
+   *  `(pattern, sf_id, annotated_count, total_count)`. */
+  def withPayload(entries: Array[(String, Int, Long, Long)], caseSensitive: Boolean): AhoCorasick =
+    compile(entries.map(_._1), caseSensitive,
+      entries.map(_._2), entries.map(_._3), entries.map(_._4))
+
+  private def compile(patterns: Array[String], caseSensitive: Boolean, sfIds: Array[Int],
+                      annotated: Array[Long], total: Array[Long]): AhoCorasick = {
+    // mutable trie; outputs are (length, pattern ordinal)
     val edges = new ArrayBuffer[mutable.TreeMap[Char, Int]]()
-    val outs = new ArrayBuffer[List[Int]]()
+    val outs = new ArrayBuffer[List[(Int, Int)]]()
     def newNode(): Int = { edges += mutable.TreeMap.empty[Char, Int]; outs += Nil; edges.length - 1 }
     newNode() // root = 0
 
-    val it = patterns.iterator
-    while (it.hasNext) {
-      val raw = it.next()
+    var ord = 0
+    while (ord < patterns.length) {
+      val raw = patterns(ord)
       if (raw != null && raw.nonEmpty) {
         val p = if (caseSensitive) raw else raw.toLowerCase
         var node = 0
@@ -140,8 +171,9 @@ object AhoCorasick {
           node = edges(node).getOrElseUpdate(c, newNode())
           i += 1
         }
-        if (!outs(node).contains(p.length)) outs(node) ::= p.length
+        if (!outs(node).exists(_._1 == p.length)) outs(node) ::= (p.length -> ord)
       }
+      ord += 1
     }
 
     val n = edges.length
@@ -174,13 +206,15 @@ object AhoCorasick {
     val chars = new Array[Char](eTot)
     val next = new Array[Int](eTot)
     val outLen = new Array[Int](oTot)
+    val outPat = new Array[Int](oTot)
     i = 0
     var e = 0; var o = 0
     while (i < n) {
       edges(i).foreach { case (c, v) => chars(e) = c; next(e) = v; e += 1 }
-      outs(i).sorted.foreach { l => outLen(o) = l; o += 1 }
+      outs(i).sorted.foreach { case (l, pat) => outLen(o) = l; outPat(o) = pat; o += 1 }
       i += 1
     }
-    new AhoCorasick(caseSensitive, edgeStart, chars, next, fail, outStart, outLen)
+    new AhoCorasick(caseSensitive, edgeStart, chars, next, fail, outStart, outLen, outPat,
+      sfIds, annotated, total)
   }
 }

@@ -21,9 +21,11 @@ object Spotter {
 
   /** Dictionary gate: only surface forms with annotationProbability ≥
    *  `minAnnotationProbability` (0.1, FSASpotter.scala:108) and at least
-   *  one annotation enter the automaton. Collect is driver-side by design:
-   *  the dictionary is the broadcast dimension (~10^6-10^7 strings at full
-   *  scale, same order as the reference's in-memory FSA). */
+   *  one annotation enter the automaton, each with its
+   *  `(sf_id, annotated_count, total_count)` as the pattern's payload.
+   *  Collect is driver-side by design: the dictionary is the broadcast
+   *  dimension (~10^6-10^7 strings at full scale, same order as the
+   *  reference's in-memory FSA). */
   def buildAutomaton(sfs: Dataset[SurfaceFormRow],
                      minAnnotationProbability: Double = 0.1,
                      caseSensitive: Boolean = true): AhoCorasick = {
@@ -32,9 +34,9 @@ object Spotter {
     val dict = sfs
       .filter(annotationProbability(col("annotated_count"), col("total_count"))
         >= minAnnotationProbability && col("annotated_count") > 0)
-      .select($"sf").as[String]
+      .select($"sf", $"sf_id", $"annotated_count", $"total_count").as[(String, Int, Long, Long)]
       .collect()
-    AhoCorasick.build(dict, caseSensitive)
+    AhoCorasick.withPayload(dict, caseSensitive)
   }
 
   /** annotationProbability = annotated/total, 1.0 when total = −1
@@ -53,43 +55,89 @@ object Spotter {
    *  `sentenceAligned` switches window PLACEMENT to the reference's
    *  sentence-accumulation rule ([[graft.util.TextUtil.sentenceWindowStarts]]);
    *  default stays token-aligned (DuckDB-recomputable — see
-   *  [[graft.pipeline.Annotate.MaxContextTokens]]). */
+   *  [[graft.pipeline.Annotate.MaxContextTokens]]).
+   *
+   *  A case-sensitive automaton built by [[buildAutomaton]] knows the
+   *  surface form of every match: its spots then also carry `sf_id` and
+   *  `annotated_count` columns (beyond the [[SpotRow]] fields), and
+   *  `spot_prob` is already the form's annotationProbability, so
+   *  [[gatedSpots]] is a filter and candidate generation joins on the id.
+   *  A case-insensitive match may differ in case from every dictionary
+   *  entry; those spots come without the id columns, `spot_prob` 0.0,
+   *  and are looked up by string. */
   def spots(paragraphs: Dataset[ParagraphRow], bc: Broadcast[AhoCorasick],
             maxContextTokens: Int = 250,
-            sentenceAligned: Boolean = false): Dataset[SpotRow] = {
+            sentenceAligned: Boolean = false): Dataset[SpotRow] =
+    spotsWith(paragraphs, bc, maxContextTokens, sentenceAligned)(_.findNonOverlapping(_))
+
+  /** A spot that knows its surface form: [[SpotRow]] plus the id columns. */
+  final case class IdSpotRow(url: String, para_idx: Int, offset: Int, sf: String,
+                             spot_prob: Double, win: Int, sf_id: Int, annotated_count: Long)
+
+  /** True when every spot row carries its surface form's `sf_id` and
+   *  `annotated_count` (the columns the spot pass adds, see [[spots]]). */
+  def carriesSfIds(spots: DataFrame): Boolean =
+    Set("sf_id", "annotated_count").subsetOf(spots.columns.toSet)
+
+  private def spotsWith(paragraphs: Dataset[ParagraphRow], bc: Broadcast[AhoCorasick],
+                        maxContextTokens: Int, sentenceAligned: Boolean)
+                       (find: (AhoCorasick, String) => Seq[AhoCorasick.Match]): Dataset[SpotRow] = {
     val spark = paragraphs.sparkSession
     import spark.implicits._
-    paragraphs.mapPartitions { it =>
-      val ac = bc.value
-      it.flatMap { p =>
-        val ms = ac.findNonOverlapping(p.para_text)
-        if (ms.isEmpty) Iterator.empty
-        else {
-          val starts = graft.util.TextUtil.contextWindowStarts(
-            p.para_text, maxContextTokens, sentenceAligned)
-          ms.iterator.map { m =>
-            SpotRow(p.url, p.para_idx, m.start,
-              p.para_text.substring(m.start, m.end), 0.0,
-              if (starts.length == 1) 0 else graft.util.TextUtil.windowOf(starts, m.start))
+    // the broadcast's local value fixes the output schema when the plan is built
+    val withIds = bc.value.caseSensitive && bc.value.hasPayload
+    def tagged[T](emit: (ParagraphRow, AhoCorasick.Match, Int, AhoCorasick) => T)
+                 (implicit enc: org.apache.spark.sql.Encoder[T]): Dataset[T] =
+      paragraphs.mapPartitions { it =>
+        val ac = bc.value
+        it.flatMap { p =>
+          val ms = find(ac, p.para_text)
+          if (ms.isEmpty) Iterator.empty
+          else {
+            val starts = graft.util.TextUtil.contextWindowStarts(
+              p.para_text, maxContextTokens, sentenceAligned)
+            ms.iterator.map { m =>
+              emit(p, m, if (starts.length == 1) 0 else graft.util.TextUtil.windowOf(starts, m.start), ac)
+            }
           }
         }
       }
-    }
+    if (withIds)
+      tagged { (p, m, win, ac) =>
+        val (annotated, total) = (ac.annotatedCount(m.pattern), ac.totalCount(m.pattern))
+        IdSpotRow(p.url, p.para_idx, m.start, p.para_text.substring(m.start, m.end),
+          if (total <= 0L) 1.0 else annotated.toDouble / total.toDouble, win,
+          ac.sfId(m.pattern), annotated)
+      }.as[SpotRow]
+    else
+      tagged((p, m, win, _) =>
+        SpotRow(p.url, p.para_idx, m.start, p.para_text.substring(m.start, m.end), 0.0, win))
   }
 
-  /** Spot filtering (P4): join the surface-form store, compute the spot
-   *  score = annotationProbability, gate at `threshold` (0.25 — the
-   *  reference's no-weights spotter threshold, DBSpotter.scala:112-117).
-   *  surface_forms is the small dim → broadcast hash join, no shuffle of
-   *  the big spots side. */
+  /** The store columns of each spot's surface form, looked up by string —
+   *  for spots that arrive without `sf_id` (see [[spots]]). */
+  private def lookedUp(rawSpots: Dataset[SpotRow], sfs: Dataset[SurfaceFormRow]): DataFrame =
+    rawSpots.toDF().drop("spot_prob", "sf_id", "annotated_count")
+      .join(broadcast(sfs.select(col("sf"), col("sf_id"), col("annotated_count"),
+        col("total_count"))), Seq("sf"))
+
+  /** Spot filtering (P4): spot score = annotationProbability, gated at
+   *  `threshold` (0.25 — the reference's no-weights spotter threshold,
+   *  DBSpotter.scala:112-117). Spots from the spot pass already carry
+   *  the score and their form's id, so the gate is a filter; spots
+   *  without the id columns join the surface-form store on the string
+   *  (broadcast hash join, no shuffle of the big spots side). Either way
+   *  the output carries `sf_id` and `annotated_count` for candidate
+   *  generation. */
   def gatedSpots(rawSpots: Dataset[SpotRow], sfs: Dataset[SurfaceFormRow],
-                 threshold: Double = 0.25): DataFrame =
-    rawSpots.drop("spot_prob")
-      .join(broadcast(sfs.select(col("sf"), col("annotated_count"), col("total_count"))), Seq("sf"))
-      .withColumn("spot_prob",
-        annotationProbability(col("annotated_count"), col("total_count")))
-      .filter(col("spot_prob") >= threshold)
-      .select("url", "para_idx", "offset", "sf", "spot_prob", "win")
+                 threshold: Double = 0.25): DataFrame = {
+    val scored =
+      if (carriesSfIds(rawSpots.toDF())) rawSpots.toDF()
+      else lookedUp(rawSpots, sfs)
+        .withColumn("spot_prob", annotationProbability(col("annotated_count"), col("total_count")))
+    scored.filter(col("spot_prob") >= threshold)
+      .select("url", "para_idx", "offset", "sf", "spot_prob", "win", "sf_id", "annotated_count")
+  }
 
   /** P4 weighted spot score: feature vector · weights
    *  (DBSpotter.spotFeatures, db/DBSpotter.scala:184-197) with features
@@ -124,8 +172,7 @@ object Spotter {
   def weightedGatedSpots(rawSpots: Dataset[SpotRow], sfs: Dataset[SurfaceFormRow],
                          weights: Seq[Double],
                          threshold: Double = 0.5): DataFrame =
-    rawSpots.drop("spot_prob")
-      .join(broadcast(sfs.select(col("sf"), col("annotated_count"), col("total_count"))), Seq("sf"))
+    lookedUp(rawSpots, sfs)
       .withColumn("spot_prob", weightedSpotScore(weights))
       .filter(col("spot_prob") >= threshold)
       .select("url", "para_idx", "offset", "sf", "spot_prob", "win")
@@ -136,29 +183,11 @@ object Spotter {
    *  (reference DBSpotter emits all gated matches and THEN runs
    *  dropOverlappingSpots, db/DBSpotter.scala:100-129; the
    *  leftmost-longest fast path in [[spots]] is the single-spotter
-   *  shortcut). Same window tagging as [[spots]]. */
+   *  shortcut). Same window tagging and id columns as [[spots]]. */
   def allSpots(paragraphs: Dataset[ParagraphRow], bc: Broadcast[AhoCorasick],
                maxContextTokens: Int = 250,
-               sentenceAligned: Boolean = false): Dataset[SpotRow] = {
-    val spark = paragraphs.sparkSession
-    import spark.implicits._
-    paragraphs.mapPartitions { it =>
-      val ac = bc.value
-      it.flatMap { p =>
-        val ms = ac.findAllAligned(p.para_text)
-        if (ms.isEmpty) Iterator.empty
-        else {
-          val starts = graft.util.TextUtil.contextWindowStarts(
-            p.para_text, maxContextTokens, sentenceAligned)
-          ms.iterator.map { m =>
-            SpotRow(p.url, p.para_idx, m.start,
-              p.para_text.substring(m.start, m.end), 0.0,
-              if (starts.length == 1) 0 else graft.util.TextUtil.windowOf(starts, m.start))
-          }
-        }
-      }
-    }
-  }
+               sentenceAligned: Boolean = false): Dataset[SpotRow] =
+    spotsWith(paragraphs, bc, maxContextTokens, sentenceAligned)(_.findAllAligned(_))
 
   /** A1 total counts: word-aligned overlap-mode match counts of every
    *  dictionary surface form over all paragraph text (the raw-string

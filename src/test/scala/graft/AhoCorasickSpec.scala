@@ -68,6 +68,19 @@ class AhoCorasickSpec extends AnyFunSuite {
     })
   }
 
+  test("each match names its pattern and the pattern's payload") {
+    val ac = AhoCorasick.withPayload(
+      Array(("USA", 7, 40L, 100L), ("United States", 3, 9L, -1L), ("usa", 8, 1L, 2L)),
+      caseSensitive = false)
+    val text = "the USA and United States act"
+    val hits = ac.findNonOverlapping(text).map(m =>
+      (text.substring(m.start, m.end), ac.sfId(m.pattern), ac.annotatedCount(m.pattern),
+        ac.totalCount(m.pattern)))
+    // "usa" folds onto "USA": the first pattern of a folded key keeps it
+    assert(hits === Seq(("USA", 7, 40L, 100L), ("United States", 3, 9L, -1L)))
+    assert(ac.hasPayload && !AhoCorasick.build(Seq("USA"), caseSensitive = true).hasPayload)
+  }
+
   test("serializable (broadcast requirement)") {
     val ac = AhoCorasick.build(Seq("United States", "USA"), caseSensitive = true)
     val bos = new java.io.ByteArrayOutputStream()

@@ -13,12 +13,12 @@ class DisambiguatorSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = GraftSession.local(4)
 
-  // tiny closed model: 2 resources, 3 tokens
+  // tiny closed model: 2 resources, 3 tokens, 10 context tokens each
   private def contexts = {
     import spark.implicits._
     Seq(
-      EntityContextRow(1, 1, 8L), EntityContextRow(1, 2, 2L), // res 1: tok1 ×8, tok2 ×2
-      EntityContextRow(2, 2, 5L), EntityContextRow(2, 3, 5L) // res 2: tok2 ×5, tok3 ×5
+      EntityContextRow(1, 1, 8L, 10L), EntityContextRow(1, 2, 2L, 10L), // res 1: tok1 ×8, tok2 ×2
+      EntityContextRow(2, 2, 5L, 10L), EntityContextRow(2, 3, 5L, 10L) // res 2: tok2 ×5, tok3 ×5
     ).toDS()
   }
   private def tokens = {
@@ -37,8 +37,8 @@ class DisambiguatorSpec extends AnyFunSuite {
     val totals = ModelBuild.Totals(100L, 200L, 100L, 22L, 3L)
     val cfg = Disambiguator.Config()
 
-    val out = Disambiguator.contextScores(candRes, docTokens, contexts, totals, cfg)
-      .collect().map(r => r.getAs[Int]("res_id") -> r.getAs[Double]("ctx_score")).toMap
+    val rows = Disambiguator.contextScores(candRes, docTokens, contexts, totals, cfg).collect()
+    val out = rows.map(r => r.getAs[Int]("res_id") -> r.getAs[Double]("ctx_score")).toMap
 
     // expected, replicating GenerativeContextSimilarity.scala:19-78:
     def pLM(tokCount: Long) = math.log(tokCount + 1.0) - math.log(22.0 + 3.0)
@@ -53,11 +53,35 @@ class DisambiguatorSpec extends AnyFunSuite {
     assert(math.abs(out(1) - exp1) < 1e-9)
     assert(math.abs(out(2) - exp2) < 1e-9)
 
-    // NIL score: all pML = 0
-    val nil = Disambiguator.nilContextScores(docTokens, totals, cfg)
-      .collect().head.getAs[Double]("nil_ctx_score")
+    // NIL score: all pML = 0, the same on every candidate of the window
+    val nils = rows.map(_.getAs[Double]("nil_ctx_score")).distinct
     val expNil = (math.log(2.0) + math.log(0.8) + pLM(10)) + (math.log(1.0) + math.log(0.8) + pLM(7))
-    assert(math.abs(nil - expNil) < 1e-9)
+    assert(nils.length === 1)
+    assert(math.abs(nils.head - expNil) < 1e-9)
+  }
+
+  test("context and softmax sums do not depend on the shuffle layout") {
+    // sums over doubles follow the rows' physical order; the scored
+    // similarity/contextual scores must come out bit-identical however
+    // the request side is partitioned
+    val m = SparkEntry.model(spark)
+    val conf = Map("spark.sql.shuffle.partitions" -> "3",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
+    val prev = conf.keys.map(k => k -> spark.conf.get(k)).toMap
+    def scores(partitions: Int) =
+      try {
+        conf.foreach { case (k, v) => spark.conf.set(k, v) }
+        spark.conf.set("spark.sql.shuffle.partitions", partitions.toString)
+        graft.pipeline.Annotate.scoredOn(spark, m, m.paragraphs)
+          .select("url", "para_idx", "offset", "res_id", "similarity_score", "contextual_score")
+          .collect().map(r => (r.getString(0), r.getInt(1), r.getInt(2), r.getInt(3)) ->
+            (r.getDouble(4), r.getDouble(5))).toMap
+      } finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
+    val (three, seven) = (scores(3), scores(7))
+    assert(three.nonEmpty)
+    assert(three.keySet === seven.keySet)
+    val differing = three.count { case (k, v) => seven(k) != v }
+    assert(differing === 0, s"$differing of ${three.size} rows differ")
   }
 
   test("D4 TF*ICF matches hand computation") {

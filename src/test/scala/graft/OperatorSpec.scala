@@ -74,6 +74,16 @@ class OperatorSpec extends AnyFunSuite {
       val off = r.getAs[Int]("offset")
       assert(t.substring(off, off + sf.length) === sf)
     }
+    // spots from XML carry no sf_id: candidate generation looks their
+    // forms up in the surface-form store
+    import spark.implicits._
+    val sfs = Seq(graft.model.SurfaceFormRow(1, "Berlin", "/berlin", 5L, 10L),
+      graft.model.SurfaceFormRow(2, "Germany", "/germany", 5L, 10L)).toDS()
+    val cands = Seq(graft.model.CandidateRow(1, 10, 5L, 1),
+      graft.model.CandidateRow(2, 20, 5L, 1)).toDS()
+    val resolved = Disambiguator.spotCandidates(df, sfs, cands)
+      .select("sf", "res_id").as[(String, Int)].collect().toSet
+    assert(resolved === Set(("Berlin", 10), ("Germany", 20)))
   }
 
   test("S16: serializers emit parseable lines") {

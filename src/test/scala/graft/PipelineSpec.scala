@@ -70,6 +70,53 @@ class PipelineSpec extends AnyFunSuite {
     jobs.get
   }
 
+  test("a served request against a buildModel model does request-sized work") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.{MapPartitionsExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    import org.apache.spark.sql.types.ObjectType
+    import graft.pipeline.Annotate
+    import graft.spot.Spotter
+    val m = SparkEntry.model(spark)
+    // every model table plans as a leaf over its cache, not its build lineage
+    Seq(m.paragraphs.toDF(), m.surfaceForms.toDF(), m.resources.toDF(), m.candidates.toDF(),
+      m.tokenTypes.toDF(), m.entityContexts.toDF()).foreach { t =>
+      assert(t.queryExecution.analyzed.children.isEmpty, t.queryExecution.analyzed.treeString)
+    }
+    val bc = spark.sparkContext.broadcast(Spotter.buildAutomaton(m.surfaceForms))
+    val request = Seq(m.paragraphs.orderBy("url", "para_idx").head()).toDS()
+    def annotations() = Annotate.annotationsFrom(spark,
+      Annotate.scoredOn(spark, m, request, automaton = Some(bc)))
+    val expected = annotations().collect()
+    assert(expected.nonEmpty)
+    val jobs = jobsOf(annotations().collect())
+    info(s"one-paragraph request: $jobs jobs")
+    assert(jobs <= 12)
+
+    val scored = Annotate.scoredOn(spark, m, request, automaton = Some(bc))
+    scored.collect()
+    object Plan extends AdaptiveSparkPlanHelper
+    val plan: SparkPlan = scored.queryExecution.executedPlan
+    // the gate and candidate generation read the spot's sf_id: the
+    // request never reads surface_forms
+    assert(Plan.collect(plan) {
+      case s: InMemoryTableScanExec if s.relation.output.exists(_.name == "sf_normalized") => s
+    }.isEmpty)
+    // the top-k candidate prune is the model's cand_rank, not a window
+    assert(!Plan.collect(plan) { case w: WindowExec => w }
+      .exists(_.orderSpec.exists(_.references.exists(_.name == "cand_prior"))))
+    // res_tok_total is an entity_contexts column, not a per-request aggregate
+    assert(!Plan.collect(plan) { case a: HashAggregateExec => a }
+      .exists(_.groupingExpressions.map(_.references.map(_.name)) == Seq(Set("res_id"))))
+    // the spot pass and the doc-token pass each run once
+    val passes = Plan.collect(plan) { case mp: MapPartitionsExec => mp.outputObjAttr.dataType }
+    assert(passes.count(_ == ObjectType(classOf[Spotter.IdSpotRow])) === 1, plan.treeString)
+    assert(passes.length === 2, plan.treeString)
+  }
+
   test("resume mid-pipeline: downstream rebuilt from committed upstream, identical rows") {
     val root = Files.createTempDirectory("graft_resume").toString
     def upstream() = SyntheticCorpus.webPages(spark, 15).toDF().select("url", "text")

@@ -131,6 +131,8 @@ class Round3FeaturesSpec extends AnyFunSuite {
       .groupBy("res_id", "token_id")
       .agg(sum(col("weight") * col("q")).as("count"))
       .select("res_id", "token_id", "count")
+      .withColumn("res_tok_total",
+        sum("count").over(org.apache.spark.sql.expressions.Window.partitionBy("res_id")))
     val expected = m.entityContexts.toDF()
       .orderBy("res_id", "token_id").collect().toSeq
     val got = derived.orderBy("res_id", "token_id").collect().toSeq

@@ -44,9 +44,10 @@ class ScaleDesignSpec extends AnyFunSuite {
   }
 
   test("scored DAG: partial-key co-partitioning saves shuffles") {
-    // the context-score aggregate and the spot ⋈ context-score join keep
-    // the (url, para_idx, win) partitioning of the candidate ⋈ doc-token
-    // join, so neither they nor the NIL-context join re-shuffle
+    // the spot-candidate rows and the doc-token histogram are both
+    // partitioned by paragraph (url, para_idx); the context join on
+    // (url, para_idx, win) reuses that partitioning instead of
+    // re-shuffling both of its sides on all three keys
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import graft.pipeline.{Annotate, ModelGraph, Runner}
@@ -88,7 +89,7 @@ class ScaleDesignSpec extends AnyFunSuite {
     // only the C4 variant retry ("Cars" → "Car") can resolve it
     val sfs = Seq(
       graft.model.SurfaceFormRow(1, "Car", "/car", 10L, 20L)).toDS()
-    val cands = Seq(graft.model.CandidateRow(1, 7, 10L)).toDS()
+    val cands = Seq(graft.model.CandidateRow(1, 7, 10L, 1)).toDS()
     val spots = Seq(("u", 1, 0, "Cars", 1.0))
       .toDF("url", "para_idx", "offset", "sf", "spot_prob")
     val off = graft.disambig.Disambiguator.spotCandidates(
@@ -101,6 +102,18 @@ class ScaleDesignSpec extends AnyFunSuite {
     assert(on.count() === 1)
     assert(row.getAs[Int]("res_id") === 7)
     assert(row.getAs[String]("sf") === "Cars") // original sf preserved
+
+    // a case-insensitive automaton's match may differ in case from the
+    // dictionary entry: such spots carry no sf_id and resolve on the
+    // normalized key ("CAR" → "/car")
+    val bc = spark.sparkContext.broadcast(
+      graft.spot.Spotter.buildAutomaton(sfs, caseSensitive = false))
+    val folded = graft.spot.Spotter.spots(
+      Seq(graft.model.ParagraphRow("u", 2, "The CAR was red.")).toDS(), bc).toDF()
+    assert(!graft.spot.Spotter.carriesSfIds(folded))
+    val hit = graft.disambig.Disambiguator.spotCandidates(
+      folded, sfs, cands, graft.disambig.Disambiguator.Config()).collect()
+    assert(hit.map(r => (r.getAs[String]("sf"), r.getAs[Int]("res_id"))).toSeq === Seq(("CAR", 7)))
   }
 
   test("lm quality joins hash, url canonicalization stays in codegen") {
