@@ -166,6 +166,12 @@ object PipelineQueries {
       // T3: the token dictionary under the Porter stemmer path
       graft.modelbuild.ModelBuild.tokenTypes(
         m(s).paragraphs, m(s).surfaceForms, graft.util.PorterStemmer.stem).toDF()),
+    "p_porter_battery" -> ((s, _) => {
+      // T3: the Porter (1980) paper's vocabulary stemmed by the Scala
+      // stemmer; the oracle stems the same words with porterStemSql
+      import s.implicits._
+      PorterBattery.map(w => (w, graft.util.PorterStemmer.stem(w))).toDF("tok", "stemmed")
+    }),
     "p_sim_thresholds" -> ((s, _) => {
       // F1 training: similarity-score quantiles of gold-correct annotations
       val mm = m(s)
@@ -387,6 +393,22 @@ object PipelineQueries {
   val OutPlaceholder = "__OUT__"
   private def p(name: String) = s"'$OutPlaceholder/$name.parquet/*.parquet'"
 
+  /** The classic Porter (1980) sample vocabulary, one word per step rule,
+    * plus the recursive y-rule chains (syzygy, yyy, sayyid, ...). */
+  private val PorterBattery = Seq(
+    "caresses", "ponies", "ties", "caress", "cats", "feed", "agreed", "plastered",
+    "bled", "motoring", "sing", "conflated", "troubled", "sized", "hopping", "tanned",
+    "falling", "hissing", "failing", "filing", "happy", "sky", "relational",
+    "conditional", "rational", "valenci", "hesitanci", "digitizer", "radicalli",
+    "differentli", "vileli", "analogousli", "vietnamization", "predication", "operator",
+    "feudalism", "decisiveness", "hopefulness", "callousness", "formaliti",
+    "sensitiviti", "sensibiliti", "triplicate", "formative", "formalize", "electriciti",
+    "electrical", "hopeful", "goodness", "revival", "allowance", "inference",
+    "airliner", "gyroscopic", "adjustable", "defensible", "irritant", "replacement",
+    "adjustment", "dependent", "adoption", "communism", "activate", "angulariti",
+    "homologous", "effective", "probate", "rate", "cease", "controll", "roll",
+    "syzygy", "sayyid", "gypsy", "yyy", "crying", "saying", "enjoyed", "obeys", "tray")
+
   // ---- Porter (1980) re-derivation in SQL (p_stemmed_tokens oracle) ------
   // Mirrors graft.util.PorterStemmer step by step over the emitted raw
   // token stream, so the T3 dictionary is hash-verified end to end
@@ -398,9 +420,10 @@ object PipelineQueries {
   // the run — cons(first y) = at-word-start OR after-vowel, then
   // alternate. The map is prefix-stable (char i's class only reads
   // chars <= i), so measure/vowel tests over stem prefixes are
-  // substring operations on one map per stage. Validated against the
-  // Scala implementation on the full corpus vocabulary plus the
-  // classic Porter-paper battery (incl. syzygy/yyy/sayyid y-chains).
+  // substring operations on one map per stage. Checked against the
+  // Scala implementation on the full corpus vocabulary (p_stemmed_tokens)
+  // and on the classic Porter-paper battery incl. the syzygy/yyy/sayyid
+  // y-chains (p_porter_battery).
   private def cvSql(s: String): String = {
     val yrun = s"(i - 1 - length(rtrim($s[1 : i - 1], 'y')))"
     val q = s"(i - $yrun - 1)"
@@ -807,6 +830,10 @@ object PipelineQueries {
              token, CAST(cnt AS BIGINT) AS count
       FROM (SELECT stemmed AS token, COUNT(*) AS cnt
             FROM (${porterStemSql(p("p_token_stream"))}) GROUP BY 1)""",
+    // T3: the paper battery through the SQL cascade, word for word
+    "p_porter_battery" -> s"""
+      SELECT tok, stemmed
+      FROM (${porterStemSql(s"(SELECT tok AS token FROM ${p("p_porter_battery")})")})""",
     // A1: annotated_count = weighted occurrence count per sf; sf_id = dense
     // rank by sf. total_count/sf_normalized are automaton/UDF products
     // (not ANSI-expressible) and pass through from the emitted table.

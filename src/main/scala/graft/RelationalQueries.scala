@@ -36,11 +36,11 @@ object RelationalQueries {
         .select(col("l_partkey"), col("cnt").cast("double").as("sum_qty"))
     }),
 
-    // C1-family: broadcast dim join + aggregation
+    // C1-family: dim join (broadcast when under the threshold) + aggregation
     "r_join_agg" -> ((s, d) => {
       val li = t(s, d, "lineitem")
       val part = t(s, d, "part")
-      li.join(broadcast(part), li("l_partkey") === part("p_partkey"))
+      li.join(part, li("l_partkey") === part("p_partkey"))
         .groupBy("p_brand")
         .agg(
           count(lit(1)).as("n"),
@@ -80,12 +80,12 @@ object RelationalQueries {
     }),
 
     // R8-family: prior = share of a global total. Computed as a scalar
-    // aggregate broadcast back onto the rows (a global window over ()
+    // aggregate cross-joined back onto the rows (a global window over ()
     // would funnel every row through one partition at scale).
     "r_prior_share" -> ((s, d) => {
       val sup = t(s, d, "supplier")
       val total = sup.agg(sum(col("s_acctbal")).as("_total"))
-      sup.crossJoin(broadcast(total))
+      sup.crossJoin(total)
         .withColumn("prior", round(col("s_acctbal") / col("_total"), 9))
         .select("s_suppkey", "prior")
     }),
@@ -136,7 +136,7 @@ object RelationalQueries {
       val ord = t(s, d, "orders").select(col("o_orderkey"), col("o_custkey"))
       val li = t(s, d, "lineitem").select(col("l_orderkey"), col("l_quantity"))
       li.join(ord, li("l_orderkey") === ord("o_orderkey"))
-        .join(broadcast(cust), ord("o_custkey") === cust("c_custkey"))
+        .join(cust, ord("o_custkey") === cust("c_custkey"))
         .groupBy("c_nationkey")
         .agg(count(lit(1)).as("n"),
           sum(col("l_quantity").cast("decimal(18,2)")).cast("double").as("sum_qty"))

@@ -111,7 +111,7 @@ object Disambiguator {
       .repartition(col("url"), col("para_idx"))
       .groupBy("url", "para_idx", "win", "token")
       .agg(sum("n").as("q_cnt"))
-      .join(broadcast(tokens.toDF()), Seq("token"))
+      .join(tokens.toDF(), Seq("token"))
       .select("url", "para_idx", "win", "token_id", "q_cnt", "count")
       .withColumnRenamed("count", "tok_count")
   }
@@ -150,7 +150,7 @@ object Disambiguator {
   private def resolveSurfaceForms(spots: DataFrame, sfs: Dataset[SurfaceFormRow],
                                   cfg: Config): DataFrame = {
     val sfDim = sfs.select(col("sf"), col("sf_id"), col("annotated_count"))
-    val exact = spots.join(broadcast(sfDim), Seq("sf"), "left")
+    val exact = spots.join(sfDim, Seq("sf"), "left")
 
     // normalized fallback dim: highest-annotated sf per normalized key
     val normDim = sfs
@@ -162,7 +162,7 @@ object Disambiguator {
 
     val withFallback = exact
       .withColumn("_sf_norm", ModelBuild.sfNormalizeUdf(col("sf")))
-      .join(broadcast(normDim), col("_sf_norm") === col("sf_normalized"), "left")
+      .join(normDim, col("_sf_norm") === col("sf_normalized"), "left")
       .withColumn("sf_id", coalesce(col("sf_id"), col("n_sf_id")))
       .withColumn("annotated_count", coalesce(col("annotated_count"), col("n_annotated_count")))
       .drop("_sf_norm", "sf_normalized", "n_sf_id", "n_annotated_count")
@@ -180,7 +180,7 @@ object Disambiguator {
       val retried = withFallback.filter(col("sf_id").isNull)
         .drop("sf_id", "annotated_count")
         .select(col("*"), posexplode(sfVariantsUdf(col("sf"))).as(Seq("_vpos", "_var")))
-        .join(broadcast(sfDim.withColumnRenamed("sf", "_var")), Seq("_var"))
+        .join(sfDim.withColumnRenamed("sf", "_var"), Seq("_var"))
         .withColumn("_vrk", row_number().over(
           Window.partitionBy("url", "para_idx", "offset").orderBy("_vpos")))
         .filter(col("_vrk") === 1)
@@ -296,7 +296,7 @@ object Disambiguator {
     val nilEntityScore = col("nil_ctx_score") + log(lit(1.0 / totals.totalAnnotated.toDouble))
 
     val base = ctx
-      .join(broadcast(res.select("res_id", "uri", "support", "types")), Seq("res_id"))
+      .join(res.select("res_id", "uri", "support", "types"), Seq("res_id"))
       .withColumn("nil_score", nilEntityScore)
       .withColumn("similarity", Mixtures.unweighted(pSgE, col("ctx_score"), pE))
       .filter(!isnan(col("similarity")) && col("similarity") > col("nil_score"))
@@ -340,7 +340,7 @@ object Disambiguator {
         Window.partitionBy("url", "para_idx", "offset")
           .orderBy(col("cooc_count").desc, col("res_id"))))
       .filter(col("_rk") === 1).drop("_rk")
-      .join(broadcast(res.select("res_id", "uri", "support", "types")), Seq("res_id"))
+      .join(res.select("res_id", "uri", "support", "types"), Seq("res_id"))
       .select("url", "para_idx", "offset", "sf", "uri", "support", "types")
 
   // ---- D4/D7: TF*ICF context similarity --------------------------------
@@ -370,7 +370,7 @@ object Disambiguator {
       .withColumn("n_cand_with_token",
         size(collect_set("res_id").over(
           Window.partitionBy("url", "para_idx", "win", "token_id"))))
-      .join(broadcast(nCand), Seq("url", "para_idx", "win"))
+      .join(nCand, Seq("url", "para_idx", "win"))
       .withColumn("icf",
         log(col("n_cand").cast("double") / col("n_cand_with_token")) + lit(1.0))
     // |context(res)| is the row's res_tok_total, the same on every row of res
@@ -402,7 +402,7 @@ object Disambiguator {
       .withColumn("_rk", row_number().over(
         Window.partitionBy("res_id").orderBy(col("count").desc, col("token_id"))))
       .filter(col("_rk") <= n)
-      .join(broadcast(tokens.select("token_id", "token")), Seq("token_id"))
+      .join(tokens.select("token_id", "token"), Seq("token_id"))
       .select(col("res_id"), col("token"), col("count"), col("_rk").as("rank"))
 
   /** R12: tag extraction — top-k entities per document by best similarity
@@ -425,7 +425,7 @@ object Disambiguator {
   def customScores(spotCands: DataFrame, res: Dataset[ResourceRow],
                    uriScores: DataFrame, k: Int = 1): DataFrame =
     spotCands
-      .join(broadcast(res.select("res_id", "uri", "support", "types")), Seq("res_id"))
+      .join(res.select("res_id", "uri", "support", "types"), Seq("res_id"))
       // aggregate the user-supplied table first: duplicate uri rows would
       // fan out candidate rows into duplicate (url, para_idx, offset)
       // results that survive the row_number top-k
@@ -444,6 +444,6 @@ object Disambiguator {
       .withColumn("_rk", row_number().over(
         Window.partitionBy("url", "para_idx", "offset").orderBy(col("_r"))))
       .filter(col("_rk") === 1).drop("_rk", "_r")
-      .join(broadcast(res.select("res_id", "uri", "support", "types")), Seq("res_id"))
+      .join(res.select("res_id", "uri", "support", "types"), Seq("res_id"))
       .select("url", "para_idx", "offset", "sf", "uri", "support", "types")
 }

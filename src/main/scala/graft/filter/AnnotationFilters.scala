@@ -76,7 +76,7 @@ object AnnotationFilters {
   /** F5 SparqlFilter (SparqlFilter.scala:30) modeled as a semi/anti join
    *  against a user-supplied URI list (network SPARQL is out of scope). */
   def uriList(df: DataFrame, uris: DataFrame, whitelist: Boolean = true): DataFrame =
-    df.join(broadcast(uris.select(col("uri"))), Seq("uri"),
+    df.join(uris.select(col("uri")), Seq("uri"),
       if (whitelist) "left_semi" else "left_anti")
 
   /** F6 CoreferenceFilter (filter/annotations/CoreferenceFilter.scala:30-80):

@@ -9,15 +9,17 @@ import org.apache.spark.sql.functions._
  * RedirectResolveFilter.scala:26-38, ContextNarrowFilter.scala:27-40 and
  * siblings), applied to the
  * link-occurrence table before the model aggregations. All are
- * relational: semi/anti joins against small URI dims (broadcast) or
- * narrow column filters — no shuffle of the big occurrence side.
+ * relational: semi/anti joins against URI dims or narrow column
+ * filters. The planner broadcasts a dim under the broadcast threshold,
+ * so the big occurrence side does not shuffle, and shuffles a larger
+ * one.
  */
 object OccurrenceFilters {
 
   /** UriWhitelistFilter (UriWhitelistFilter.scala:31-41): keep only
    *  occurrences whose target is a concept URI. */
   def uriWhitelist(occs: DataFrame, conceptUris: DataFrame): DataFrame =
-    occs.join(broadcast(conceptUris.select(col("uri"))), Seq("uri"), "left_semi")
+    occs.join(conceptUris.select(col("uri")), Seq("uri"), "left_semi")
 
   /** RedirectResolveFilter (RedirectResolveFilter.scala:26-38): map each
    *  target through the redirect closure (join + coalesce). */

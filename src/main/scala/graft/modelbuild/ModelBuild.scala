@@ -81,9 +81,10 @@ object ModelBuild {
    * reference's getEndOfChainURI (/root/reference index/.../db/
    * WikipediaToDBpediaClosure.scala:106-116): follow the chain until no
    * next hop or the next hop was already visited (cycles stop at the
-   * last new node). The driver loop runs one tiny broadcast join per
-   * hop of the longest chain, with no hop cap: a step only moves to a
-   * node not yet on its path, so every chain stops.
+   * last new node). The driver loop runs one join per hop of the
+   * longest chain, with no hop cap: a step only moves to a node not yet
+   * on its path, so every chain stops. The planner picks each hop's join
+   * strategy by the sizes of the iterate and the edge set.
    */
   def redirectClosure(redirects: DataFrame): DataFrame = {
     val edges = redirects.select(col("subj").as("e_from"), col("obj").as("e_to"))
@@ -94,7 +95,7 @@ object ModelBuild {
       array(col("e_from"), col("e_to")).as("path"))
     var changed = 1L
     while (changed > 0) {
-      val stepped = cur.join(broadcast(edges), cur("to") === edges("e_from"), "left")
+      val stepped = cur.join(edges, cur("to") === edges("e_from"), "left")
         .withColumn("next",
           when(col("e_to").isNull || array_contains(col("path"), col("e_to")), lit(null))
             .otherwise(col("e_to")))
@@ -122,10 +123,10 @@ object ModelBuild {
   }
 
   /** Map a URI column through the redirect closure (left join + coalesce;
-   *  closure is a small dim → broadcast). */
+   *  the planner broadcasts the closure while it is under the broadcast
+   *  threshold and shuffles both sides once it grows past it). */
   def resolveRedirects(df: DataFrame, uriCol: String, closure: DataFrame): DataFrame =
-    df.join(broadcast(closure.withColumnRenamed("from", "_rc_from")
-        .withColumnRenamed("to", "_rc_to")),
+    df.join(closure.withColumnRenamed("from", "_rc_from").withColumnRenamed("to", "_rc_to"),
         df(uriCol) === col("_rc_from"), "left")
       .withColumn(uriCol, coalesce(col("_rc_to"), col(uriCol)))
       .drop("_rc_from", "_rc_to")
@@ -136,7 +137,7 @@ object ModelBuild {
   def resolvedOccurrences(occs: Dataset[OccurrenceRow], closure: DataFrame,
                           disambigUris: DataFrame): DataFrame =
     resolveRedirects(occs.toDF(), "uri", closure)
-      .join(broadcast(disambigUris.select(col("subj").as("_dis_uri"))),
+      .join(disambigUris.select(col("subj").as("_dis_uri")),
         col("uri") === col("_dis_uri"), "left_anti")
 
   // ---- A1: surface forms ----------------------------------------------
@@ -178,7 +179,7 @@ object ModelBuild {
       .agg(sort_array(collect_set(col("obj"))).as("types"))
     denseIds(
       support
-        .join(broadcast(types), Seq("uri"), "left")
+        .join(types, Seq("uri"), "left")
         .withColumn("types", coalesce(col("types"), array().cast("array<string>"))),
       "uri", "res_id")
       .select("res_id", "uri", "support", "types")
@@ -196,8 +197,8 @@ object ModelBuild {
     val spark = resolvedOccs.sparkSession
     import spark.implicits._
     saltedSum(resolvedOccs, Seq("sf", "uri"), col("weight"), col("url"))
-      .join(broadcast(sfs.select("sf_id", "sf")), Seq("sf"))
-      .join(broadcast(res.select(col("res_id"), col("uri"))), Seq("uri"))
+      .join(sfs.select("sf_id", "sf"), Seq("sf"))
+      .join(res.select(col("res_id"), col("uri")), Seq("uri"))
       .select(col("sf_id"), col("res_id"), col("cnt").as("cooc_count"))
       .withColumn("cand_rank", row_number().over(
         Window.partitionBy("sf_id").orderBy(col("cooc_count").desc, col("res_id"))))
@@ -282,8 +283,8 @@ object ModelBuild {
       .toDF("uri", "token", "w")
     tokenized
       .groupBy("uri", "token").agg(sum("w").as("count"))
-      .join(broadcast(res.select("res_id", "uri")), Seq("uri"))
-      .join(broadcast(tokens.select("token_id", "token")), Seq("token"))
+      .join(res.select("res_id", "uri"), Seq("uri"))
+      .join(tokens.select("token_id", "token"), Seq("token"))
       .select("res_id", "token_id", "count")
       .withColumn("res_tok_total", sum("count").over(Window.partitionBy("res_id")))
       .as[EntityContextRow]
@@ -349,8 +350,8 @@ object ModelBuild {
    *  with URI sanity rules (reference: ExtractCandidateMap.scala:62-118). */
   def conceptUris(allUris: DataFrame, redirects: DataFrame, disambigs: DataFrame): DataFrame =
     allUris.select(col("uri"))
-      .join(broadcast(redirects.select(col("subj").as("uri"))), Seq("uri"), "left_anti")
-      .join(broadcast(disambigs.select(col("subj").as("uri"))), Seq("uri"), "left_anti")
+      .join(redirects.select(col("subj").as("uri")), Seq("uri"), "left_anti")
+      .join(disambigs.select(col("subj").as("uri")), Seq("uri"), "left_anti")
       .filter(!col("uri").contains("/") && !col("uri").contains("%23") &&
         col("uri").rlike("[A-Za-z]"))
 

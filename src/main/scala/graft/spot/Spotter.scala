@@ -118,15 +118,16 @@ object Spotter {
    *  for spots that arrive without `sf_id` (see [[spots]]). */
   private def lookedUp(rawSpots: Dataset[SpotRow], sfs: Dataset[SurfaceFormRow]): DataFrame =
     rawSpots.toDF().drop("spot_prob", "sf_id", "annotated_count")
-      .join(broadcast(sfs.select(col("sf"), col("sf_id"), col("annotated_count"),
-        col("total_count"))), Seq("sf"))
+      .join(sfs.select(col("sf"), col("sf_id"), col("annotated_count"), col("total_count")),
+        Seq("sf"))
 
   /** Spot filtering (P4): spot score = annotationProbability, gated at
    *  `threshold` (0.25 — the reference's no-weights spotter threshold,
    *  DBSpotter.scala:112-117). Spots from the spot pass already carry
    *  the score and their form's id, so the gate is a filter; spots
    *  without the id columns join the surface-form store on the string
-   *  (broadcast hash join, no shuffle of the big spots side). Either way
+   *  (the planner broadcasts the store when it is under the broadcast
+   *  threshold, and shuffles both sides when it is not). Either way
    *  the output carries `sf_id` and `annotated_count` for candidate
    *  generation. */
   def gatedSpots(rawSpots: Dataset[SpotRow], sfs: Dataset[SurfaceFormRow],
@@ -214,7 +215,7 @@ object Spotter {
   /** P11 NonCommonWordSelector: drop spots whose sf is in a common-words
    *  dictionary (spot/NonCommonWordSelector.scala:23-62) — anti join. */
   def dropCommonWords(spots: DataFrame, commonWords: DataFrame): DataFrame =
-    spots.join(broadcast(commonWords.select(col("word").as("sf"))), Seq("sf"), "left_anti")
+    spots.join(commonWords.select(col("word").as("sf")), Seq("sf"), "left_anti")
 
   /** R5: duplicate spot removal (DBSpotter.scala:131 `spots.distinct`). */
   def distinctSpots(spots: DataFrame): DataFrame =

@@ -96,16 +96,6 @@ object ConnectedComponents {
           lit(java.math.BigDecimal.ZERO))).head()
       (r.getLong(0), BigDecimal(r.getDecimal(1)))
     }
-    // the checkpointed RDD behind a localCheckpoint'd frame, so the
-    // PREVIOUS round's blocks can be freed as soon as the next round is
-    // materialized — GC + ContextCleaner would get there eventually, but
-    // an 11-round run should hold 2 edge-set copies, not 11. (Under the
-    // reliable path unpersist is a no-op — checkpoint files live in the
-    // caller's checkpoint dir — so freeing stays correct on both paths.)
-    def checkpointedRdd(df: DataFrame) =
-      df.queryExecution.analyzed.collectFirst {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }
     // reliable lineage cut when the session provisions a checkpoint dir
     // (executor-failure durability at cluster scale), localCheckpoint
     // as the single-JVM fallback — see the scaladoc durability note
@@ -113,7 +103,8 @@ object ConnectedComponents {
     def cut(df: DataFrame): DataFrame =
       if (reliable) df.checkpoint(false) else df.localCheckpoint(false)
     // lazy cut: the signature action right after is the job that
-    // materializes it, so each round's compute runs as ONE job
+    // materializes it, so each round's compute runs as ONE job. The
+    // ContextCleaner frees a round's blocks once nothing references it
     var e = cut(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .filter(col("src") =!= col("dst")).distinct())
     var sig = signature(e)
@@ -121,8 +112,7 @@ object ConnectedComponents {
     var i = 0
     while (!converged && i < maxIter) {
       val next = cut(smallStar(largeStar(e)))
-      val nextSig = signature(next) // materializes next (last read of e)
-      checkpointedRdd(e).foreach(_.unpersist(blocking = false))
+      val nextSig = signature(next)
       converged = nextSig == sig
       sig = nextSig
       e = next

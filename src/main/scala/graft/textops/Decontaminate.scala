@@ -13,14 +13,15 @@ import org.apache.spark.sql.functions._
  *
  * Scale shape (the part that matters at 100 TB): benchmark suites are
  * megabytes while the corpus is terabytes, so the benchmark gram set is
- * the classic broadcast dim — the corpus side is ONE explode with a
- * map-side-combinable distinct, the join is a BroadcastHashJoin with no
- * corpus shuffle, and the per-doc rollup shuffles only the HIT rows
- * (rare by construction — that is the point of decontamination). At
- * extreme benchmark sizes the broadcast swaps for a bloom filter of
- * gram hashes with identical plan shape; the exact join below IS the
- * false-positive-free verification pass such a deployment runs on the
- * bloom survivors.
+ * small enough that the planner, going by its size, broadcasts it — the
+ * corpus side is ONE explode with a map-side-combinable distinct, the
+ * join is then a BroadcastHashJoin with no corpus shuffle, and the
+ * per-doc rollup shuffles only the HIT rows (rare by construction — that
+ * is the point of decontamination). A gram set past the broadcast
+ * threshold plans a shuffled join instead of failing. At extreme
+ * benchmark sizes a bloom filter of gram hashes prunes the corpus side
+ * first; the exact join below IS the false-positive-free verification
+ * pass such a deployment runs on the bloom survivors.
  *
  * Docs shorter than n tokens emit no grams and can never be flagged —
  * the published procedure has the same property (its fallback for tiny
@@ -48,8 +49,8 @@ object Decontaminate {
   def flag(corpus: DataFrame, bench: DataFrame, n: Int = 13,
            idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val cg = grams(corpus, n, idCol, textCol)
-    val bg = broadcast(grams(bench, n, idCol, textCol)
-      .select(col("doc_id").as("bench_id"), col("gram")))
+    val bg = grams(bench, n, idCol, textCol)
+      .select(col("doc_id").as("bench_id"), col("gram"))
     val hits = cg.join(bg, cg("gram") === bg("gram") &&
         cg("doc_id") =!= bg("bench_id"))
       .groupBy(cg("doc_id").as("doc_id"))

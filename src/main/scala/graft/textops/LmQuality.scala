@@ -12,18 +12,18 @@ import org.apache.spark.sql.functions._
  * training-data curation. CCNet uses a 5-gram KenLM trained offline;
  * with no external model files in this sandbox the unigram LM trained
  * on the scored corpus is the self-contained equivalent — the dataflow
- * (train token statistics, broadcast them, score every document in one
+ * (train token statistics, join them back, score every document in one
  * pass) is the part that has to survive 100 TB, and it is identical.
  *
  * Scale shape: two map-side-combinable shuffles (per-(doc, token)
  * counts, then the vocabulary rollup), the vocabulary dim joined back
  * onto the per-doc counts, and one final combinable per-doc
- * aggregation. No windows, no global sort, nothing driver-side. The
- * vocabulary join deliberately carries NO broadcast hint: at fixture
- * scale statistics put it under the auto-broadcast threshold anyway,
- * while a web-corpus vocabulary (tens of millions of rows, GBs) must
- * fall back to a shuffled hash join — a forced hint would OOM the
- * driver there. Only the 1-row totals aggregate is hint-broadcast.
+ * aggregation. No windows, no global sort, nothing driver-side. No join
+ * carries a broadcast hint: the planner broadcasts the vocabulary and
+ * the 1-row totals aggregate while they are under the auto-broadcast
+ * threshold (always, at fixture scale), and a web-corpus vocabulary
+ * (tens of millions of rows, GBs) falls back to a shuffled join instead
+ * of exhausting the driver.
  * A production run materializes the vocabulary table once and reuses
  * it across scoring passes; here the lineage recomputes it per action,
  * which only costs at fixture scale.
@@ -43,7 +43,7 @@ object LmQuality {
     val totals = vocab.agg(sum("c_tok").as("n_total"), count(lit(1)).as("v_size"))
     val scored = dt
       .join(vocab, "token")
-      .crossJoin(broadcast(totals))
+      .crossJoin(totals)
       .groupBy("doc_id")
       .agg(
         sum(col("c_dt") *

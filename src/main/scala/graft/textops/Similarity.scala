@@ -33,12 +33,13 @@ object Similarity {
   /**
    * Exact top-k cosine neighbors for each query vector.
    * `queries`/`corpus`: (id, vec). The corpus side streams; per-query
-   * top-k via window rank. Queries are broadcast when small.
+   * top-k via window rank. The planner broadcasts the query side when
+   * it is under the broadcast threshold.
    */
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
     val q = queries.select(col("id").as("query_id"), col("vec").as("q_vec"))
     val c = corpus.select(col("id").as("neighbor_id"), col("vec").as("c_vec"))
-    val scored = c.crossJoin(broadcast(q))
+    val scored = c.crossJoin(q)
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("cosine", cosine(col("q_vec"), col("c_vec")))
     scored
@@ -101,14 +102,14 @@ object Similarity {
    * corpus into `nCells` cells; queries probe their `nProbe` nearest
    * cells and re-rank exactly within them. Shuffle volume is
    * Σ(query-probes × cell size) instead of |Q|·|C|; the codebook is a
-   * driver-side bounded dim (nCells × dims doubles, a few KB) exactly
-   * like the spotter automaton, broadcast into the assignment join.
+   * driver-side bounded dim (nCells × dims doubles, a few KB), which the
+   * planner broadcasts into the assignment join by its size.
    *
    * Training is Lloyd's algorithm with a deterministic seed (the
    * `nCells` corpus vectors with the smallest xxhash64(id)) and a fixed
    * iteration count, ties broken by id — identical codebooks on every
    * run/executor layout, no model state. Per-iteration work is one
-   * broadcast-join + groupBy over the training sample.
+   * assignment join + groupBy over the training sample.
    *
    * Training runs on a BOUNDED sample (standard IVF practice — a
    * codebook of nCells centroids gains nothing from more than a few
@@ -176,8 +177,8 @@ object Similarity {
       centroids.toSeq.map { case (c, v) => (c, v.toSeq) })
       .toDF("cell", "c_vec")
     // deliberate bounded cross join: |vecs| × nCells rows, the inherent
-    // IVF assignment cost, with the tiny codebook broadcast
-    vecs.crossJoin(broadcast(cents))
+    // IVF assignment cost; the planner broadcasts the tiny codebook
+    vecs.crossJoin(cents)
       .withColumn("_sim", cosine(col("vec"), col("c_vec")))
       .withColumn("probe_rank", row_number().over(
         Window.partitionBy("id").orderBy(col("_sim").desc, col("cell"))))
