@@ -3,14 +3,13 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.modelbuild.ModelBuild
 
 /**
  * The relational operator families of SURVEY.md §2 (counting aggregates
  * A1-A6, candidate joins C1/C2, windows R1-R3/R8, filters F1-F5, set ops
  * R5/R7) exercised over the driver's parquet tables so DuckDB can
- * hash-verify values. Each query uses the same library helpers the KG
- * pipeline uses (saltedSum, topKPerKey, softmax windows).
+ * hash-verify values. Each query has a shape the KG pipeline uses
+ * (groupBy sums, top-k per key, softmax windows).
  *
  * Numeric parity rules: exact sums go through DECIMAL casts (then to
  * DOUBLE); float expressions are rounded to 6 places on both sides.
@@ -28,13 +27,12 @@ object RelationalQueries {
         count(lit(1)).as("n"),
         sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))),
 
-    // A1 with skew handling: salted two-phase aggregation
-    "r_salted_agg" -> ((s, d) => {
-      val li = t(s, d, "lineitem")
-        .withColumn("qty", col("l_quantity").cast("decimal(18,2)"))
-      ModelBuild.saltedSum(li, Seq("l_partkey"), col("qty"), col("l_orderkey"))
-        .select(col("l_partkey"), col("cnt").cast("double").as("sum_qty"))
-    }),
+    // A1's skewed-key sum: one groupBy + sum, combined map-side, so a
+    // hot key crosses the exchange as one partial row per map task
+    "r_salted_agg" -> ((s, d) =>
+      t(s, d, "lineitem")
+        .groupBy("l_partkey")
+        .agg(sum(col("l_quantity").cast("decimal(18,2)")).cast("double").as("sum_qty"))),
 
     // C1-family: dim join (broadcast when under the threshold) + aggregation
     "r_join_agg" -> ((s, d) => {

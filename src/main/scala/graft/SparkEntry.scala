@@ -1,9 +1,10 @@
 package graft
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import graft.model.SpotRow
 import graft.pipeline.{Annotate, Model}
-import graft.spot.Spotter
+import graft.spot.{AhoCorasick, Spotter}
 import graft.triples.Triples
 
 /**
@@ -33,14 +34,15 @@ object SparkEntry {
     * wall-clock. */
   private final class Shared(val spark: SparkSession) {
     lazy val model: Model = Annotate.syntheticModel(spark, nDocs = 120)
+    lazy val automaton: Broadcast[AhoCorasick] =
+      spark.sparkContext.broadcast(Spotter.buildAutomaton(model.surfaceForms))
     /** Raw (pre-gate) leftmost-longest spots — emitted as `p_raw_spots`
       * so the DuckDB oracles can re-derive both spot gates from it. */
-    lazy val raw: DataFrame = Spotter.spots(model.paragraphs,
-      spark.sparkContext.broadcast(Spotter.buildAutomaton(model.surfaceForms))).toDF().cache()
+    lazy val raw: DataFrame = Spotter.spots(model.paragraphs, automaton).toDF().cache()
     lazy val gated: DataFrame = Spotter.gatedSpots(
       raw.as[SpotRow](Encoders.product[SpotRow]), model.surfaceForms).cache()
     lazy val scored: DataFrame =
-      Annotate.scoredOn(spark, model, model.paragraphs, gated = Some(gated)).cache()
+      Annotate.scoredOn(spark, model, model.paragraphs, automaton = Some(automaton)).cache()
   }
 
   private var shared: Option[Shared] = None

@@ -114,21 +114,15 @@ object AnnotationFilters {
   }
 
   /** The standard chain with server defaults confidence=0.1, support=10
-   *  (SpotlightConfiguration.java:48-55). */
+   *  (SpotlightConfiguration.java:48-55): F1 → F2 → F3 → F6, the server's
+   *  chain with no type list (F4 keeps everything then). */
   def standardChain(annotations: Dataset[AnnotationRow],
                     conf: Double = 0.1,
                     minSupport: Long = 10,
-                    simThresholds: Seq[Double] = Nil,
-                    typeList: Seq[String] = Nil,
-                    coref: Boolean = true): Dataset[AnnotationRow] = {
+                    simThresholds: Seq[Double] = Nil): Dataset[AnnotationRow] = {
     val spark = annotations.sparkSession
     import spark.implicits._
-    var df = annotations.toDF()
-    df = confidence(df, simThresholds, conf)
-    df = percentageOfSecond(df, conf)
-    df = types(df, typeList)
-    df = support(df, minSupport)
-    val ds = df.as[AnnotationRow]
-    if (coref) coreference(ds) else ds
+    coreference(support(percentageOfSecond(
+      confidence(annotations.toDF(), simThresholds, conf), conf), minSupport).as[AnnotationRow])
   }
 }

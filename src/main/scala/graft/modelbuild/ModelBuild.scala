@@ -1,21 +1,24 @@
 package graft.modelbuild
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.model._
+import graft.spot.{AhoCorasick, Spotter}
 import graft.util.TextUtil
 
 /**
  * Model-build aggregations (SURVEY.md §2.7, A1-A10): the offline count
  * stores of the reference — surface forms, resources, candidate map,
  * token dictionary, entity contexts — expressed as groupBy/agg dataflows
- * with deterministic dense IDs and explicit skew handling.
+ * with deterministic dense IDs, each store built in one pass
+ * (CreateSpotlightModel.scala:143-228).
  *
  * Scale design:
- *  - every aggregation is a map-side-combinable sum (partial agg free);
- *    the head-surface-form skew case additionally goes through
- *    [[saltedSum]] (two-phase salt → final) per the north rule;
+ *  - every count is one groupBy + sum, which Spark combines map-side:
+ *    a head surface form ("USA") crosses the exchange as at most one
+ *    partial row per map task (ScaleDesignSpec), so no reducer sees its
+ *    raw occurrences; skewed join partitions are split by AQE;
  *  - dense IDs come from [[denseIds]]: a range-partitioned rank plus
  *    driver-side partition offsets, stable across runs and parallelism
  *    (SURVEY.md §7.4(6)), never monotonically_increasing_id.
@@ -62,64 +65,35 @@ object ModelBuild {
     out
   }
 
-  /** Two-phase salted aggregation: pre-aggregate on (keys, salt) then
-   *  final on keys. Breaks reducer hot keys ("USA") into `buckets`
-   *  sub-keys; deterministic salt from a caller-provided column. */
-  def saltedSum(df: DataFrame, keys: Seq[String], value: Column,
-                saltFrom: Column, buckets: Int = 64): DataFrame = {
-    val partial = df
-      .withColumn("_salt", pmod(xxhash64(saltFrom), lit(buckets)))
-      .groupBy((keys.map(col) :+ col("_salt")): _*)
-      .agg(sum(value).as("_partial"))
-    partial.groupBy(keys.map(col): _*).agg(sum("_partial").as("cnt"))
-  }
-
   // ---- A8: redirect transitive closure --------------------------------
 
   /**
-   * Iterative self-join to fixpoint with cycle guard — semantics of the
-   * reference's getEndOfChainURI (/root/reference index/.../db/
-   * WikipediaToDBpediaClosure.scala:106-116): follow the chain until no
-   * next hop or the next hop was already visited (cycles stop at the
-   * last new node). The driver loop runs one join per hop of the
-   * longest chain, with no hop cap: a step only moves to a node not yet
-   * on its path, so every chain stops. The planner picks each hop's join
-   * strategy by the sizes of the iterate and the edge set.
+   * The reference's getEndOfChainURI (WikipediaToDBpediaClosure.scala:
+   * 106-116) as a walk on the driver: every subject follows its chain
+   * until there is no next hop or the next hop is already on its path,
+   * so a cycle stops at the last new node and a self-loop maps its
+   * subject to itself. A subject with several edges follows its smallest
+   * target in string order, whatever the input order. The edges (subj,
+   * obj) are the redirect dump, which the caller holds on the driver
+   * (the reference keeps the same map in memory); the closure (from, to)
+   * comes back as a local relation, one row per subject.
    */
   def redirectClosure(redirects: DataFrame): DataFrame = {
-    val edges = redirects.select(col("subj").as("e_from"), col("obj").as("e_to"))
-      .dropDuplicates("e_from")
-      .cache()
-    var cur = edges.select(
-      col("e_from").as("from"), col("e_to").as("to"),
-      array(col("e_from"), col("e_to")).as("path"))
-    var changed = 1L
-    while (changed > 0) {
-      val stepped = cur.join(edges, cur("to") === edges("e_from"), "left")
-        .withColumn("next",
-          when(col("e_to").isNull || array_contains(col("path"), col("e_to")), lit(null))
-            .otherwise(col("e_to")))
-        .select(
-          col("from"),
-          coalesce(col("next"), col("to")).as("to"),
-          when(col("next").isNull, col("path"))
-            .otherwise(array_union(col("path"), array(col("next")))).as("path"),
-          col("next").isNotNull.as("moved"))
-        // cut lineage every hop: cached iterates would nest each other's
-        // plans, and the plan description doubles per hop (a 20-hop chain
-        // exhausts the driver heap). Lazy, so the count below is the one
-        // job that materializes it; the ContextCleaner frees an iterate's
-        // blocks once nothing references it.
-        .localCheckpoint(false)
-      changed = stepped.filter(col("moved")).count()
-      cur = stepped.drop("moved")
-    }
-    // Checkpoint the closure without its path column, so the last iterate
-    // is unreferenced, and free the edges dim — callers materialize the
-    // closure.
-    val out = cur.select(col("from"), col("to")).localCheckpoint(true)
-    edges.unpersist()
-    out
+    val spark = redirects.sparkSession
+    import spark.implicits._
+    val next = redirects.select("subj", "obj").as[(String, String)].collect()
+      .groupMapReduce(_._1)(_._2)((a, b) => if (a <= b) a else b)
+    next.toSeq.map { case (from, to) =>
+      var path = Set(from, to)
+      var end = to
+      var hop = next.get(end)
+      while (hop.exists(h => !path(h))) {
+        end = hop.get
+        path += end
+        hop = next.get(end)
+      }
+      (from, end)
+    }.toDF("from", "to")
   }
 
   /** Map a URI column through the redirect closure (left join + coalesce;
@@ -145,22 +119,29 @@ object ModelBuild {
   /**
    * sfAndTotalCounts: per surface form, the weighted count of
    * link-anchored (annotated) occurrences plus the raw string total count
-   * (−1 = unknown, which the reference maps to annotationProbability 1.0,
-   * model/SurfaceForm.scala:51-61). Head-sf skew → salted two-phase agg.
+   * over `paragraphs` (−1 = unknown when there are none, which the
+   * reference maps to annotationProbability 1.0,
+   * model/SurfaceForm.scala:51-61). The totals pass spots every annotated
+   * form over the paragraph text ([[Spotter.totalCounts]], an automaton
+   * over the distinct form strings) and is read once: the A7 correction
+   * it feeds takes its sub-ngram side from the annotated counts alone.
    */
   def surfaceForms(occs: Dataset[OccurrenceRow],
-                   totalCounts: Option[DataFrame]): Dataset[SurfaceFormRow] = {
+                   paragraphs: Option[Dataset[ParagraphRow]]): Dataset[SurfaceFormRow] = {
     val spark = occs.sparkSession
     import spark.implicits._
-    val annotated = saltedSum(occs.toDF(), Seq("sf"), col("weight"), col("url"))
-      .withColumnRenamed("cnt", "annotated_count")
-    val withTotals = totalCounts match {
-      case Some(tc) => annotated
-        .join(tc.select(col("sf"), col("total_count")), Seq("sf"), "left")
-        .withColumn("total_count", coalesce(col("total_count"), lit(-1L)))
+    val annotated = occs.groupBy("sf").agg(sum("weight").as("annotated_count"))
+    val counted = paragraphs match {
+      case Some(ps) =>
+        val dict = annotated.filter(col("annotated_count") > 0).select("sf").as[String].collect()
+        val totals = Spotter.totalCounts(ps,
+          spark.sparkContext.broadcast(AhoCorasick.build(dict, caseSensitive = true)))
+        corrected(annotated
+          .join(totals, Seq("sf"), "left")
+          .withColumn("total_count", coalesce(col("total_count"), lit(-1L))), annotated)
       case None => annotated.withColumn("total_count", lit(-1L))
     }
-    denseIds(withTotals, "sf", "sf_id")
+    denseIds(counted, "sf", "sf_id")
       .withColumn("sf_normalized", sfNormalizeUdf(col("sf")))
       .select("sf_id", "sf", "sf_normalized", "annotated_count", "total_count")
       .as[SurfaceFormRow]
@@ -172,8 +153,7 @@ object ModelBuild {
   def resources(resolvedOccs: DataFrame, instanceTypes: DataFrame): Dataset[ResourceRow] = {
     val spark = resolvedOccs.sparkSession
     import spark.implicits._
-    val support = saltedSum(resolvedOccs, Seq("uri"), col("weight"), col("url"))
-      .withColumnRenamed("cnt", "support")
+    val support = resolvedOccs.groupBy("uri").agg(sum("weight").as("support"))
     val types = instanceTypes
       .groupBy(col("subj").as("uri"))
       .agg(sort_array(collect_set(col("obj"))).as("types"))
@@ -188,7 +168,7 @@ object ModelBuild {
 
   // ---- A3: candidate map -----------------------------------------------
 
-  /** pairCounts keyed by (sf_id, res_id) — the salted sf→URI map — with
+  /** pairCounts keyed by (sf_id, res_id) — the sf→URI map — with
    *  each pair's `cand_rank` within its sf (cooc_count desc, res_id), so
    *  the annotate path's top-k candidate prune is a filter. */
   def candidates(resolvedOccs: DataFrame,
@@ -196,10 +176,10 @@ object ModelBuild {
                  res: Dataset[ResourceRow]): Dataset[CandidateRow] = {
     val spark = resolvedOccs.sparkSession
     import spark.implicits._
-    saltedSum(resolvedOccs, Seq("sf", "uri"), col("weight"), col("url"))
+    resolvedOccs.groupBy("sf", "uri").agg(sum("weight").as("cooc_count"))
       .join(sfs.select("sf_id", "sf"), Seq("sf"))
       .join(res.select(col("res_id"), col("uri")), Seq("uri"))
-      .select(col("sf_id"), col("res_id"), col("cnt").as("cooc_count"))
+      .select(col("sf_id"), col("res_id"), col("cooc_count"))
       .withColumn("cand_rank", row_number().over(
         Window.partitionBy("sf_id").orderBy(col("cooc_count").desc, col("res_id"))))
       .as[CandidateRow]
@@ -305,17 +285,28 @@ object ModelBuild {
   def ngramTotalCorrection(sfs: Dataset[SurfaceFormRow]): Dataset[SurfaceFormRow] = {
     val spark = sfs.sparkSession
     import spark.implicits._
-    val subNgrams = sfs.flatMap { r =>
-      val toks = r.sf.split(" ")
-      if (toks.length <= 1) Iterator.empty
-      else (for {
-        len <- (1 until toks.length).iterator
-        start <- (0 to toks.length - len).iterator
-      } yield (toks.slice(start, start + len).mkString(" "), r.annotated_count)).iterator
+    corrected(sfs.toDF(), sfs.toDF())
+      .select("sf_id", "sf", "sf_normalized", "annotated_count", "total_count")
+      .as[SurfaceFormRow]
+  }
+
+  /** `counts` (sf, annotated_count, total_count, …) with the A7 correction
+   *  applied: the sub-ngram side reads (sf, annotated_count) of `annotated`. */
+  private def corrected(counts: DataFrame, annotated: DataFrame): DataFrame = {
+    val spark = counts.sparkSession
+    import spark.implicits._
+    val subNgrams = annotated.select("sf", "annotated_count").as[(String, Long)].flatMap {
+      case (sf, containing) =>
+        val toks = sf.split(" ")
+        if (toks.length <= 1) Iterator.empty
+        else for {
+          len <- (1 until toks.length).iterator
+          start <- (0 to toks.length - len).iterator
+        } yield (toks.slice(start, start + len).mkString(" "), containing)
     }.toDF("sf", "containing_annotated")
     val corrections = subNgrams.groupBy("sf")
       .agg(sum("containing_annotated").as("_corr"))
-    sfs.toDF()
+    counts
       .join(corrections, Seq("sf"), "left")
       .withColumn("total_count",
         when(col("total_count") > 0L,
@@ -323,8 +314,6 @@ object ModelBuild {
             col("annotated_count")))
           .otherwise(col("total_count")))
       .drop("_corr")
-      .select("sf_id", "sf", "sf_normalized", "annotated_count", "total_count")
-      .as[SurfaceFormRow]
   }
 
   // ---- R6: deterministic train/test split ---------------------------------

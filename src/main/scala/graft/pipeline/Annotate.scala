@@ -92,25 +92,19 @@ object Annotate {
    *  any other paragraph set; annotations come back under the caller's
    *  own (url, para_idx, offset) keys, MAX_CONTEXT-capped.
    *
-   *  Callers annotating repeatedly (streaming micro-batches) pass the
-   *  prebuilt `automaton` broadcast so the driver-side build runs once;
-   *  callers holding already-computed (possibly cached) `gated` spots of
-   *  these paragraphs pass them to skip the spot stage altogether. Those
-   *  spots must carry the `win` column produced by [[Spotter.spots]] with
-   *  the SAME maxContextTokens and `cfg.sentenceAlignedWindows`. */
+   *  Callers annotating repeatedly (streaming micro-batches, served
+   *  requests) pass the prebuilt `automaton` broadcast so the driver-side
+   *  build runs once. */
   def scoredOn(spark: SparkSession, m: Model, paragraphs: Dataset[ParagraphRow],
                cfg: Disambiguator.Config = Disambiguator.Config(),
                automaton: Option[org.apache.spark.broadcast.Broadcast[graft.spot.AhoCorasick]] = None,
-               maxContextTokens: Int = MaxContextTokens,
-               gated: Option[DataFrame] = None)
+               maxContextTokens: Int = MaxContextTokens)
       : DataFrame = {
-    val spots = gated.getOrElse {
-      val bc = automaton.getOrElse(
-        spark.sparkContext.broadcast(Spotter.buildAutomaton(m.surfaceForms)))
-      Spotter.gatedSpots(
-        Spotter.spots(paragraphs, bc, maxContextTokens, cfg.sentenceAlignedWindows),
-        m.surfaceForms)
-    }
+    val bc = automaton.getOrElse(
+      spark.sparkContext.broadcast(Spotter.buildAutomaton(m.surfaceForms)))
+    val spots = Spotter.gatedSpots(
+      Spotter.spots(paragraphs, bc, maxContextTokens, cfg.sentenceAlignedWindows),
+      m.surfaceForms)
     val spotCands = Disambiguator.spotCandidates(spots, m.surfaceForms, m.candidates, cfg)
     val docTokens = Disambiguator.docTokenHistogram(paragraphs, m.tokenTypes,
       m.stemmer, maxContextTokens, cfg.sentenceAlignedWindows)

@@ -6,7 +6,6 @@ import graft.model._
 import graft.extract.Extractor
 import graft.modelbuild.ModelBuild
 import graft.sources.NTriples
-import graft.spot.Spotter
 import graft.util.TextUtil
 
 /**
@@ -21,11 +20,9 @@ import graft.util.TextUtil
  * [[Annotate.buildModel]] caches in the session and hands back a leaf
  * over the cache, [[Runner.run]] commits each table as a checkpointed
  * stage and reads it back; either way later stages and requests plan
- * against the table, not its build lineage. Intermediate caches are released
- * here, for both callers: the page cache once paragraphs and occurrences
- * exist, the pre-correction surface-form cache once the corrected table
- * exists — repeated builds in one long-lived session must not accumulate
- * either.
+ * against the table, not its build lineage. The page cache is released
+ * here, for both callers, once paragraphs and occurrences exist —
+ * repeated builds in one long-lived session must not accumulate it.
  */
 object ModelGraph {
 
@@ -67,29 +64,10 @@ object ModelGraph {
     val resolved = materialize("resolved_occurrences",
       () => ModelBuild.resolvedOccurrences(occurrences, closure, disambigs))
 
-    // set only when the stage is computed (a committed stage is not)
-    var preCorrection: Option[Dataset[SurfaceFormRow]] = None
-    val sfs = materialize("surface_forms", () => {
-      val firstPass = ModelBuild.surfaceForms(occurrences, None)
-      if (!withTotalCounts) firstPass.toDF()
-      else {
-        // the first pass, without raw totals, is the full dictionary the
-        // totals spot pass matches against
-        val bc = spark.sparkContext.broadcast(
-          Spotter.buildAutomaton(firstPass, minAnnotationProbability = 0.0))
-        // A7: longest-annotation correction — annotated occurrences of a
-        // longer sf also raw-matched its sub-ngrams; remove that inflation
-        // so annotationProbability isn't deflated for nested forms
-        // (reference: MemoryStoreIndexer.scala:69-109). The pre-correction
-        // table is cached: the correction self-joins it, and without the
-        // cache each side would re-run the whole totalCounts spotting chain.
-        val withTotals = ModelBuild.surfaceForms(
-          occurrences, Some(Spotter.totalCounts(paragraphs, bc))).cache()
-        preCorrection = Some(withTotals)
-        ModelBuild.ngramTotalCorrection(withTotals).toDF()
-      }
-    }).as[SurfaceFormRow]
-    preCorrection.foreach { p => sfs.count(); p.unpersist() }
+    // A1 with raw totals over the paragraph text and the A7 correction
+    // (reference: MemoryStoreIndexer.scala:69-109), or totals unknown
+    val sfs = materialize("surface_forms", () => ModelBuild.surfaceForms(occurrences,
+      if (withTotalCounts) Some(paragraphs) else None).toDF()).as[SurfaceFormRow]
 
     val resources = materialize("resources",
       () => ModelBuild.resources(resolved, instanceTypes).toDF()).as[ResourceRow]

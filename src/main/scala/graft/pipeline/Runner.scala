@@ -25,8 +25,8 @@ object Runner {
 
   final case class Result(model: Model, triples: DataFrame, root: String)
 
-  /** The checkpoint materializer: commit each model table as a stage
-   *  under `root`; the committed read-back is the table. */
+  /** The checkpoint materializer: commit each table as a stage under
+   *  `root`; the committed read-back is the table. */
   private[graft] def checkpointed(spark: SparkSession, root: String): ModelGraph.Materialize =
     (name, compute) => Pipeline.stage(spark, s"$root/$name")(compute())
 
@@ -37,12 +37,9 @@ object Runner {
           instanceTypesNt: Seq[String],
           root: String): Result = {
     import spark.implicits._
-    def st(name: String)(f: => DataFrame): DataFrame =
-      Pipeline.stage(spark, s"$root/$name")(f)
-
+    val commit = checkpointed(spark, root)
     val (model, resolved) = ModelGraph.build(spark, pages, redirectsNt, disambiguationsNt,
-      instanceTypesNt, graft.util.TextUtil.IdentityStemmer, withTotalCounts = true,
-      checkpointed(spark, root))
+      instanceTypesNt, graft.util.TextUtil.IdentityStemmer, withTotalCounts = true, commit)
 
     // F1 training as a model stage: simThresholds = ascending quantiles
     // of gold-correct similarity scores over the model's own corpus (the
@@ -51,22 +48,21 @@ object Runner {
     // instead of re-running the scored DAG. The scored DAG is cached for
     // its two readers (thresholds, annotations) and released after both.
     val scoredDf = Annotate.scoredOn(spark, model, model.paragraphs).cache()
-    val simThresholds = st("sim_thresholds") {
+    val simThresholds = commit("sim_thresholds", () => {
       val ts = graft.filter.AnnotationFilters.trainSimThresholds(
         graft.disambig.Disambiguator.best(scoredDf), resolved.toDF())
       ts.zipWithIndex.map { case (t, i) => (i, t) }.toDF("quantile_idx", "threshold")
-    }
+    })
     val thresholdsSeq = simThresholds.orderBy("quantile_idx")
       .select("threshold").as[Double].collect().toSeq
 
-    val annotations = st("annotations") {
-      Annotate.annotationsFrom(spark, scoredDf, simThresholds = thresholdsSeq).toDF()
-    }.as[AnnotationRow]
+    val annotations = commit("annotations",
+      () => Annotate.annotationsFrom(spark, scoredDf, simThresholds = thresholdsSeq).toDF())
+      .as[AnnotationRow]
     scoredDf.unpersist()
 
-    val triples = st("triples") {
-      Triples.all(annotations, model.resources, model.closure).toDF()
-    }
+    val triples = commit("triples",
+      () => Triples.all(annotations, model.resources, model.closure).toDF())
 
     Result(model, triples, root)
   }

@@ -20,20 +20,19 @@ import graft.model.{ParagraphRow, SpotRow, SurfaceFormRow}
 object Spotter {
 
   /** Dictionary gate: only surface forms with annotationProbability ≥
-   *  `minAnnotationProbability` (0.1, FSASpotter.scala:108) and at least
-   *  one annotation enter the automaton, each with its
+   *  0.1 (FSASpotter.scala:108) and at least one annotation enter the
+   *  automaton, each with its
    *  `(sf_id, annotated_count, total_count)` as the pattern's payload.
    *  Collect is driver-side by design: the dictionary is the broadcast
    *  dimension (~10^6-10^7 strings at full scale, same order as the
    *  reference's in-memory FSA). */
   def buildAutomaton(sfs: Dataset[SurfaceFormRow],
-                     minAnnotationProbability: Double = 0.1,
                      caseSensitive: Boolean = true): AhoCorasick = {
     val spark = sfs.sparkSession
     import spark.implicits._
     val dict = sfs
       .filter(annotationProbability(col("annotated_count"), col("total_count"))
-        >= minAnnotationProbability && col("annotated_count") > 0)
+        >= 0.1 && col("annotated_count") > 0)
       .select($"sf", $"sf_id", $"annotated_count", $"total_count").as[(String, Int, Long, Long)]
       .collect()
     AhoCorasick.withPayload(dict, caseSensitive)

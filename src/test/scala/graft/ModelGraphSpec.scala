@@ -10,7 +10,8 @@ import graft.util.PorterStemmer
 
 /** One model-build graph: the checkpointed Runner path and the
   * session-cached buildModel path build the same tables, with the same
-  * stemmer threading, and both release the page cache. */
+  * stemmer threading, and both release the page cache; a build runs a
+  * bounded number of Spark jobs. */
 class ModelGraphSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = GraftSession.local(4)
@@ -43,6 +44,18 @@ class ModelGraphSpec extends AnyFunSuite {
     assert(cachedPages.storageLevel === StorageLevel.NONE, "buildModel leaves pages cached")
 
     assertSameTables(tables(viaRunner), tables(viaCache))
+  }
+
+  test("a checkpointed model build runs each step once") {
+    // a second surface-form pass or a per-hop closure loop adds jobs
+    val root = Files.createTempDirectory("graft_graph_jobs").toString
+    val jobs = SparkJobs.jobsOf(spark) {
+      ModelGraph.build(spark, pages(), SyntheticCorpus.redirectsNt,
+        SyntheticCorpus.disambiguationsNt, SyntheticCorpus.instanceTypesNt,
+        graft.util.TextUtil.IdentityStemmer, withTotalCounts = true, Runner.checkpointed(spark, root))
+    }
+    info(s"model build over 40 pages: $jobs jobs")
+    assert(jobs <= 58)
   }
 
   test("stemmer threads through the checkpointed graph as through buildModel") {

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -40,35 +39,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(plainJobs > 0 && stageJobs === plainJobs)
   }
 
-  /** Jobs started by `action`, seen by a SparkListener. Listener events
-    * arrive asynchronously but in order: a barrier job in its own group
-    * marks the end of the count. */
-  private def jobsOf(action: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = java.util.UUID.randomUUID().toString
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val done = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
-          case `group` => jobs.incrementAndGet(); ()
-          case g if g == s"$group-end" => done.countDown()
-          case _ => ()
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      action
-      sc.setJobGroup(s"$group-end", "barrier")
-      sc.parallelize(Seq(1), 1).count()
-      assert(done.await(30, java.util.concurrent.TimeUnit.SECONDS))
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-    jobs.get
-  }
+  private def jobsOf(action: => Unit): Int = SparkJobs.jobsOf(spark)(action)
 
   test("a served request against a buildModel model does request-sized work") {
     import spark.implicits._

@@ -8,7 +8,6 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveS
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
-import graft.modelbuild.ModelBuild
 
 /**
  * Scale-design evidence (SURVEY.md §4, §7.4(2)): the skew fixture must
@@ -78,32 +77,24 @@ class ScaleDesignSpec extends AnyFunSuite {
     plans.asScala.toSeq
   }
 
-  test("salted aggregation splits the hot key across reducers") {
-    import spark.implicits._
-    // 50k rows of one hot key ("USA"-style) + a small tail
-    val hot = spark.range(50000).select(
-      lit("USA").as("sf"), lit(1L).as("weight"),
-      concat(lit("url"), col("id")).as("url"))
-    val tail = spark.range(500).select(
-      concat(lit("sf"), col("id")).as("sf"), lit(1L).as("weight"),
-      concat(lit("u"), col("id")).as("url"))
+  test("a plain sum ships the hot key as at most one partial row per input partition") {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    // 50k rows of one hot key ("USA"-style) + a tail of 500 distinct keys,
+    // summed the way the surface-form, support and pair counts are
+    val hot = spark.range(0, 50000, 1, 8).select(lit("USA").as("sf"), lit(1L).as("weight"))
+    val tail = spark.range(0, 500, 1, 2)
+      .select(concat(lit("sf"), col("id")).as("sf"), lit(1L).as("weight"))
     val occs = hot.unionByName(tail)
-
-    // the partial (salted) stage must spread USA over many sub-keys:
-    // reproduce the partial aggregation and count distinct salts used
-    val partial = occs
-      .withColumn("_salt", pmod(xxhash64(col("url")), lit(64)))
-      .groupBy("sf", "_salt").agg(sum("weight").as("w"))
-    val saltsForHot = partial.filter(col("sf") === "USA").count()
-    assert(saltsForHot >= 32, s"hot key spread over only $saltsForHot salts")
-    // max partial-group size is bounded far below the hot-key total
-    val maxGroup = partial.agg(max("w")).head().getLong(0)
-    assert(maxGroup <= 50000 / 16, s"one salted group still holds $maxGroup rows")
-
-    // and the final result is exact
-    val total = ModelBuild.saltedSum(occs.toDF(), Seq("sf"), col("weight"), col("url"))
-      .filter(col("sf") === "USA").head().getLong(1)
-    assert(total === 50000L)
+    val partitions = occs.rdd.getNumPartitions
+    val counts = occs.groupBy("sf").agg(sum("weight").as("cnt"))
+    val exchanges = Plan.collect(executed(counts)) { case e: ShuffleExchangeExec => e }
+    assert(exchanges.size === 1)
+    // each tail key is one input row, hence one partial row: the rest of
+    // what the exchange carries is the hot key's partial sums
+    val hotPartials = exchanges.head.metrics("shuffleRecordsWritten").value - 500
+    info(s"hot key: 50000 rows in, $hotPartials partial rows over $partitions input partitions")
+    assert(hotPartials >= 1 && hotPartials <= partitions)
+    assert(counts.filter(col("sf") === "USA").head().getLong(1) === 50000L)
   }
 
   test("scored DAG: partial-key co-partitioning saves shuffles") {
@@ -209,12 +200,13 @@ class ScaleDesignSpec extends AnyFunSuite {
     }
   }
 
-  test("parquet scans push the filter and prune columns; salted sums combine map-side") {
+  test("parquet scans push the filter and prune columns; sums combine map-side") {
     import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.aggregate.HashAggregateExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    val dir = java.nio.file.Files.createTempDirectory("graft_scan").toString + "/lineitem"
+    val tables = java.nio.file.Files.createTempDirectory("graft_scan").toString
+    val dir = s"$tables/lineitem.parquet"
     spark.range(2000).select(col("id").as("l_orderkey"), (col("id") % 97).as("l_partkey"),
       (col("id") % 50).cast("double").as("l_quantity"), lit("n/a").as("l_comment"))
       .write.parquet(dir)
@@ -227,17 +219,15 @@ class ScaleDesignSpec extends AnyFunSuite {
     assert(scans.head.metadata("PushedFilters").contains("GreaterThan(l_quantity,30.0)"))
     assert(scans.head.requiredSchema.fieldNames.toSeq === Seq("l_orderkey", "l_quantity"))
 
-    // both exchanges of the two-phase sum ship partial sums, not rows
-    val salted = ModelBuild.saltedSum(li, Seq("l_partkey"), col("l_quantity"), col("l_orderkey"))
-    val exchanges = (salted.queryExecution.executedPlan match {
+    // the skewed-key sum has one exchange, and it ships partial sums, not rows
+    val summed = RelationalQueries.queries("r_salted_agg")(spark, tables)
+    val exchanges = (summed.queryExecution.executedPlan match {
       case a: AdaptiveSparkPlanExec => a.initialPlan
       case p => p
     }).collect { case e: ShuffleExchangeExec => e }
-    assert(exchanges.size === 2)
-    exchanges.foreach { e =>
-      val agg = e.child.collectFirst { case h: HashAggregateExec => h }
-      assert(agg.exists(_.aggregateExpressions.exists(_.mode == Partial)), e.treeString)
-    }
+    assert(exchanges.size === 1)
+    val agg = exchanges.head.child.collectFirst { case h: HashAggregateExec => h }
+    assert(agg.exists(_.aggregateExpressions.exists(_.mode == Partial)), exchanges.head.treeString)
   }
 
   test("at fixture scale the planner broadcasts the model dimensions by their size") {
