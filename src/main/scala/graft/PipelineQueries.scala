@@ -713,7 +713,7 @@ object PipelineQueries {
   /** DuckDB oracles for the model-build family (VERDICT r2 item 3:
     * graduate these from rows-only to hash-verified). All recompute the
     * stage from p_occurrences / p_ntriples_parse — the raw extracted
-    * facts — so a wrong join, salt-phase bug, or unstable dense-ID
+    * facts — so a wrong join, a lost partial sum, or an unstable dense-ID
     * assignment in ModelBuild fails the driver compare. */
   def oracleSql: Map[String, String] = Map(
     // S2: the extracted text re-assembled from the post-strip sidecar —

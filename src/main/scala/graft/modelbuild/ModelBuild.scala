@@ -119,7 +119,7 @@ object ModelBuild {
   /**
    * sfAndTotalCounts: per surface form, the weighted count of
    * link-anchored (annotated) occurrences plus the raw string total count
-   * over `paragraphs` (−1 = unknown when there are none, which the
+   * over `paragraphs` (−1 = unknown without them, which the
    * reference maps to annotationProbability 1.0,
    * model/SurfaceForm.scala:51-61). The totals pass spots every annotated
    * form over the paragraph text ([[Spotter.totalCounts]], an automaton
