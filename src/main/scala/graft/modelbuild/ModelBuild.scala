@@ -125,12 +125,15 @@ object ModelBuild {
    * form over the paragraph text ([[Spotter.totalCounts]], an automaton
    * over the distinct form strings) and is read once: the A7 correction
    * it feeds takes its sub-ngram side from the annotated counts alone.
+   * The annotated counts are summed once and held until the dense IDs
+   * are cut: the totals dictionary and both sides of the correction read
+   * them.
    */
   def surfaceForms(occs: Dataset[OccurrenceRow],
                    paragraphs: Option[Dataset[ParagraphRow]]): Dataset[SurfaceFormRow] = {
     val spark = occs.sparkSession
     import spark.implicits._
-    val annotated = occs.groupBy("sf").agg(sum("weight").as("annotated_count"))
+    val annotated = occs.groupBy("sf").agg(sum("weight").as("annotated_count")).persist()
     val counted = paragraphs match {
       case Some(ps) =>
         val dict = annotated.filter(col("annotated_count") > 0).select("sf").as[String].collect()
@@ -141,7 +144,9 @@ object ModelBuild {
           .withColumn("total_count", coalesce(col("total_count"), lit(-1L))), annotated)
       case None => annotated.withColumn("total_count", lit(-1L))
     }
-    denseIds(counted, "sf", "sf_id")
+    val ided = denseIds(counted, "sf", "sf_id")
+    annotated.unpersist()
+    ided
       .withColumn("sf_normalized", sfNormalizeUdf(col("sf")))
       .select("sf_id", "sf", "sf_normalized", "annotated_count", "total_count")
       .as[SurfaceFormRow]

@@ -42,8 +42,7 @@ object Annotate {
    *  are re-used by several downstream joins). Each returned table is a
    *  leaf over its columnar cache ([[org.apache.spark.sql.graft.CachedLeaf]]),
    *  not the build lineage, so a request plans against the cached data
-   *  only. Only paragraphs, occurrences and the corrected surface forms
-   *  are forced here. */
+   *  only. Each cache is filled as its table is built, one job per table. */
   def buildModel(spark: SparkSession,
                  pages: Dataset[WebPage],
                  redirectsNt: Seq[String],
@@ -52,7 +51,11 @@ object Annotate {
                  withTotalCounts: Boolean = true,
                  stemmer: graft.util.TextUtil.Stemmer = graft.util.TextUtil.IdentityStemmer): Model =
     ModelGraph.build(spark, pages, redirectsNt, disambiguationsNt, instanceTypesNt,
-      stemmer, withTotalCounts, (_, compute) => org.apache.spark.sql.graft.CachedLeaf(compute()))._1
+      stemmer, withTotalCounts, (_, compute) => {
+        val table = org.apache.spark.sql.graft.CachedLeaf(compute())
+        table.count()
+        table
+      })._1
 
   /**
    * D1 MAX_CONTEXT (= 250, DBTwoStepDisambiguator.scala:71): the

@@ -17,16 +17,17 @@ import graft.util.TextUtil
  *                  resources, candidates, entity_contexts} ─> totals
  *
  * Every table goes through the caller's [[Materialize]]:
- * [[Annotate.buildModel]] caches in the session and hands back a leaf
- * over the cache, [[Runner.run]] commits each table as a checkpointed
- * stage and reads it back; either way later stages and requests plan
- * against the table, not its build lineage. The page cache is released
- * here, for both callers, once paragraphs and occurrences exist —
- * repeated builds in one long-lived session must not accumulate it.
+ * [[Annotate.buildModel]] fills a session cache and hands back a leaf
+ * over it, [[Runner.run]] commits each table as a checkpointed stage and
+ * reads it back; either way later stages and requests plan against the
+ * table, not its build lineage. The page cache is released here, for
+ * both callers, once paragraphs and occurrences exist — repeated builds
+ * in one long-lived session must not accumulate it.
  */
 object ModelGraph {
 
-  /** (stage name, compute) => the table to build on. */
+  /** (stage name, compute) => the table to build on, already built:
+   *  the graph reads no input again once its dependents are returned. */
   type Materialize = (String, () => DataFrame) => DataFrame
 
   /** The model plus the resolved occurrences (Runner trains its F1
@@ -57,7 +58,6 @@ object ModelGraph {
       () => Extractor.paragraphs(Extractor.extracted(pages)).toDF()).as[ParagraphRow]
     val occurrences = materialize("occurrences",
       () => Extractor.occurrences(pages).toDF()).as[OccurrenceRow]
-    paragraphs.count(); occurrences.count()
     pages.unpersist()
 
     val closure = materialize("redirect_closure", () => ModelBuild.redirectClosure(redirects))

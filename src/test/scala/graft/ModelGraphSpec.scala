@@ -55,7 +55,7 @@ class ModelGraphSpec extends AnyFunSuite {
         graft.util.TextUtil.IdentityStemmer, withTotalCounts = true, Runner.checkpointed(spark, root))
     }
     info(s"model build over 40 pages: $jobs jobs")
-    assert(jobs <= 58)
+    assert(jobs <= 54)
   }
 
   test("stemmer threads through the checkpointed graph as through buildModel") {
